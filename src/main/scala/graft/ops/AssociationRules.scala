@@ -1,9 +1,12 @@
 package graft.ops
 
-import graft.core.Ingest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Ingest, Utf8Order}
+import graft.functions.TopKStrBuffer
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -31,12 +34,17 @@ import scala.collection.mutable
   *   - pattern = 1-based id assigned by scanning items in id order and
   *     flood-filling directed reachability over kept associations
   *     (rs:114-135). The reachable item-graph is min-support-bounded, so it
-  *     is collected to the driver and partitioned exactly; everything else
-  *     stays distributed.
+  *     is collected to the driver and partitioned exactly.
   *   - consequents/confidence_scores = top 5 by confidence descending
   *     (rs:259-266). The reference's tie order is unstable (HashMap
   *     iteration); we deterministically break ties by consequent name
   *     ascending — documented deviation.
+  *
+  * Two tiers, gated on the pair-volume bound nRows · (maxItemsetSize − 1)
+  * (see [[Params.eagerMaterializePairVolume]]): within
+  * min(5M, eagerMaterializePairVolume) the non-null rows are collected
+  * once (a capped `limit`) and the whole single pass above runs on the
+  * driver; beyond it everything stays distributed shuffle SQL.
   *
   * Output columns: item, support, lift_score, pattern, consequents,
   * confidence_scores — one row per valid item, in item-id order.
@@ -53,12 +61,13 @@ object AssociationRules {
     *   Spark plans are declared eagerly, so "lazy when consumed" is
     *   expressed as this explicit opt-out rather than plan introspection.
     * @param maxPatternEdges driver-memory gate for the reference-parity
-    *   pattern DFS (the one deliberately non-distributed step): the DFS
-    *   collects the distinct kept (antecedent, consequent) pairs, bounded
-    *   only by (valid items)² — at a low minSupport on cluster-scale data
-    *   that is a silent driver OOM without this cap. The symmetric
-    *   unweighted case (minConfidence <= minSupport) never hits the cap:
-    *   it routes through distributed [[ConnectedComponents]] instead.
+    *   pattern DFS (the one deliberately non-distributed step of the
+    *   distributed tier): the DFS collects the distinct kept (antecedent,
+    *   consequent) pairs, bounded only by (valid items)² — at a low
+    *   minSupport on cluster-scale data that is a silent driver OOM
+    *   without this cap. Enforced on both tiers. The symmetric unweighted
+    *   case (minConfidence <= minSupport) never hits the cap: it routes
+    *   through connected components instead.
     */
   case class Params(
       minSupport: Double = 0.01,
@@ -84,7 +93,12 @@ object AssociationRules {
         * scales with pair fan-out, and a small input with big (but
         * still admitted) transactions hits the blowup long before 5M
         * raw rows. 250M = the old 5M-row gate at the default
-        * maxItemsetSize = 50, so default behavior is unchanged. */
+        * maxItemsetSize = 50, so default behavior is unchanged.
+        *
+        * The same bound also caps the driver-local tier: it runs when the
+        * non-null rows satisfy nRows · (maxItemsetSize − 1) ≤
+        * min(5M, eagerMaterializePairVolume). 0 forces the distributed
+        * tier. */
       eagerMaterializePairVolume: Long = 250_000_000L)
 
   def graphAssociationRules(
@@ -106,11 +120,25 @@ object AssociationRules {
         col(itemCol).cast("string").as("item"),
         lit(1.0).as("freq"))
     }
+    val nonNull = $"tid".isNotNull && $"item".isNotNull && $"freq".isNotNull
+
+    // Driver-local tier: one capped collect of the non-null rows. Its
+    // order is the `_rid` (partition) order, so first-appearance ids need
+    // no row index; over the cap, fall through to the distributed plan.
+    val rowCap = math.min(LocalPairVolume, params.eagerMaterializePairVolume) /
+      math.max(1L, params.maxItemsetSize.toLong - 1L)
+    if (rowCap > 0) {
+      val capped = projected.where(nonNull)
+        .limit(rowCap.toInt + 1).as[(Long, String, Double)].collect()
+      if (capped.length <= rowCap)
+        return localRules(spark, capped, projected.schema("item").nullable, params)
+    }
+
     val ordered =
       if (params.firstAppearanceOrder) Ingest.withRowIdx(projected, "_rid")
       else projected.withColumn("_rid", lit(0L))
     val rows = ordered
-      .where($"tid".isNotNull && $"item".isNotNull && $"freq".isNotNull)
+      .where(nonNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // count-probe (the louvainHier gate discipline) on the RAW input,
@@ -199,11 +227,10 @@ object AssociationRules {
       // driver state at any scale); general directed case → reference-parity
       // driver DFS behind the maxPatternEdges gate; opted-out → 0 sentinel,
       // zero extra jobs.
-      val symmetric = !params.weighted && params.minConfidence <= params.minSupport
       val patterned =
         if (!params.includePattern)
           validItems.select($"item", lit(0).as("pattern"))
-        else if (symmetric) patternIdsViaComponents(spark, validItems, kept)
+        else if (symmetric(params)) patternIdsViaComponents(spark, validItems, kept)
         else broadcast(patternIds(spark, validItems, kept, params.maxPatternEdges))
 
       val orderCol = if (params.firstAppearanceOrder) $"first_rid" else $"item"
@@ -223,6 +250,11 @@ object AssociationRules {
         .drop("_ord")
     } finally rows.unpersist()
   }
+
+  /** Unweighted with minConfidence <= minSupport: every co-occurring valid
+    * pair is kept in both directions, so patterns are undirected
+    * components. */
+  private def symmetric(p: Params): Boolean = !p.weighted && p.minConfidence <= p.minSupport
 
   /** Fully distributed pattern numbering for the symmetric case
     * (unweighted, minConfidence <= minSupport): every co-occurring valid
@@ -257,13 +289,12 @@ object AssociationRules {
     keyed.join(compKey, "component").select($"item", $"pattern")
   }
 
-  /** Exact replica of the reference's pattern DFS (rs:114-135): scan items
-    * in id order; each unvisited valid item starts pattern n and floods its
-    * directed reachability set. The item graph is min-support-bounded —
-    * collected to the driver (the one deliberately non-distributed step),
-    * behind a loud `maxPatternEdges` gate: the distinct kept-pair set is
-    * bounded only by (valid items)², and an ungated collect at a low
-    * minSupport on cluster-scale data is a silent driver OOM.
+  /** The distributed tier's pattern numbering for the directed case: the
+    * valid items in scan order and the distinct kept pairs are collected
+    * (the one deliberately non-distributed step, behind the loud
+    * `maxPatternEdges` gate: the distinct kept-pair set is bounded only by
+    * (valid items)², and an ungated collect at a low minSupport on
+    * cluster-scale data is a silent driver OOM), then [[dfsPatterns]].
     */
   private def patternIds(
       spark: SparkSession, validItems: DataFrame, kept: DataFrame,
@@ -272,16 +303,32 @@ object AssociationRules {
     val items: Array[String] = validItems
       .select($"item", $"first_rid").orderBy($"first_rid", $"item")
       .select($"item").as[String].collect()
-    val edges: Array[(String, String)] = kept
-      .select($"antecedent", $"consequent").distinct()
-      .limit(maxPatternEdges + 1)
-      .as[(String, String)].collect()
-    require(edges.length <= maxPatternEdges,
+    val pairs = kept.select($"antecedent", $"consequent").distinct()
+    // the +1 probe would overflow at Int.MaxValue (Spark rejects the
+    // negative limit); no collect can exceed that cap anyway
+    val probe =
+      if (maxPatternEdges < Int.MaxValue - 1) pairs.limit(maxPatternEdges + 1) else pairs
+    val edges = probe.as[(String, String)].collect()
+    requirePatternEdges(edges.length, maxPatternEdges)
+    dfsPatterns(items, edges).toSeq.toDF("item", "pattern")
+  }
+
+  private def requirePatternEdges(distinctPairs: Int, maxPatternEdges: Int): Unit =
+    require(distinctPairs <= maxPatternEdges,
       s"association pattern graph exceeds maxPatternEdges=$maxPatternEdges " +
         "distinct kept pairs; raise Params.maxPatternEdges (driver memory " +
         "permitting), raise minSupport/minConfidence, or use the symmetric " +
         "unweighted mode (minConfidence <= minSupport) which computes " +
-        "patterns via distributed connected components")
+        "patterns via connected components")
+
+  /** Exact replica of the reference's pattern DFS (rs:114-135): scan
+    * `items` in id order; each unvisited item starts pattern n and floods
+    * its directed reachability over `edges` (through unvisited items).
+    * Each flood visits a reachability set, so adjacency order is
+    * irrelevant and the numbering is a pure function of its inputs.
+    */
+  private def dfsPatterns(
+      items: Seq[String], edges: Array[(String, String)]): mutable.LinkedHashMap[String, Int] = {
     val adj = edges.groupBy(_._1).map { case (k, v) => (k, v.map(_._2)) }
     val patternOf = mutable.LinkedHashMap.empty[String, Int]
     var next = 1
@@ -300,6 +347,125 @@ object AssociationRules {
         next += 1
       }
     }
-    patternOf.toSeq.toDF("item", "pattern")
+    patternOf
+  }
+
+  /** Pair-volume cap of the driver-local tier — the `maxLocalEdges`
+    * default of [[ConnectedComponents.components]]: at most 5M pairs are
+    * enumerated and 5M rows collected. */
+  private val LocalPairVolume = 5_000_000L
+
+  /** Spark SQL's double `>=` (SQLOrderingUtil.compareDoubles): -0.0 equals
+    * 0.0, NaN equals NaN and ranks above every number. */
+  private def sqlGe(a: Double, b: Double): Boolean =
+    a == b || java.lang.Double.compare(a, b) >= 0
+
+  /** The distributed tier's output schema: `item` keeps the input
+    * column's nullability; support is a `sum` when weighted, a non-null
+    * count cast otherwise. */
+  private def outputSchema(itemNullable: Boolean, weighted: Boolean): StructType = StructType(Seq(
+    StructField("item", StringType, nullable = itemNullable),
+    StructField("support", DoubleType, nullable = weighted),
+    StructField("lift_score", DoubleType, nullable = false),
+    StructField("pattern", IntegerType, nullable = false),
+    StructField("consequents", ArrayType(StringType, containsNull = true), nullable = false),
+    StructField("confidence_scores", ArrayType(DoubleType, containsNull = true),
+      nullable = false)))
+
+  /** The driver-local tier: the reference's single pass over the collected
+    * non-null (tid, item, freq) rows, in collect (= `_rid`) order, with
+    * the distributed tier's semantics — support and validity over all
+    * rows, `txOk` pairing exclusion, row-level ordered pairs with their
+    * multiplicity, both confidence modes, lift as one division of the
+    * summed numerator, top-5 through [[TopKStrBuffer]] (the
+    * `top_k_by_str` order), and the same pattern numbering. Sums run in
+    * row order; they equal the distributed sums exactly whenever those
+    * are order-independent (integer-valued or dyadic frequencies).
+    */
+  private def localRules(spark: SparkSession, rows: Array[(Long, String, Double)],
+      itemNullable: Boolean, params: Params): DataFrame = {
+    val names = mutable.ArrayBuffer.empty[String]
+    val idOf = mutable.HashMap.empty[String, Int]
+    // item ids by first appearance = min(_rid) order
+    val itemOf = rows.map { r => idOf.getOrElseUpdate(r._2, { names += r._2; names.length - 1 }) }
+    val nItems = names.length
+    val wsupp = new Array[Double](nItems)
+    val cnt = new Array[Long](nItems)
+    // rows per transaction: the `txOk` size, and countDistinct(tid)
+    val txRows = mutable.LongMap.empty[Int]
+    rows.indices.foreach { r =>
+      wsupp(itemOf(r)) += rows(r)._3
+      cnt(itemOf(r)) += 1
+      txRows(rows(r)._1) = txRows.getOrElse(rows(r)._1, 0) + 1
+    }
+    val totalTx = txRows.size.toDouble
+    val support = Array.tabulate(nItems)(i => if (params.weighted) wsupp(i) else cnt(i).toDouble)
+    val valid = support.map(s => sqlGe(s / totalTx, params.minSupport))
+    // pairing input (`vrows`): rows of valid items in small-enough transactions
+    val byTx = rows.indices
+      .filter(r => valid(itemOf(r)) && txRows(rows(r)._1) <= params.maxItemsetSize)
+      .groupBy(rows(_)._1)
+
+    // lift numerator: Σ freq_a·freq_c (weighted) or the kept count
+    val liftNum = new Array[Double](nItems)
+    val top = new Array[TopKStrBuffer](nItems) // null: no kept pair
+    val payload = names.map(UTF8String.fromString)
+    val edges = mutable.HashSet.empty[(Int, Int)]
+    val ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
+    for (vr <- byTx.valuesIterator; i <- vr; j <- vr) {
+      val a = itemOf(i)
+      val c = itemOf(j)
+      val sa = support(a)
+      if (a != c && params.weighted && sa == 0.0) {
+        // Spark's double `/` by zero: a null confidence (never kept), or
+        // an error under ANSI mode
+        if (ansi) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero.")
+      } else if (a != c) {
+        val conf =
+          if (params.weighted) rows(i)._3 * rows(j)._3 / sa else sa / totalTx
+        if (sqlGe(conf, params.minConfidence)) {
+          liftNum(a) += (if (params.weighted) rows(i)._3 * rows(j)._3 else 1.0)
+          if (top(a) == null) top(a) = new TopKStrBuffer(5)
+          top(a).insert(if (conf == 0.0) 0.0 else conf, payload(c)) // -0.0 → 0.0
+          if (params.includePattern) edges += ((a, c))
+        }
+      }
+    }
+
+    // output order: first appearance, or item name (Spark's binary order)
+    val ordered = {
+      val v = (0 until nItems).filter(valid)
+      if (params.firstAppearanceOrder) v else v.sortBy(names)(Utf8Order.ordering)
+    }
+    lazy val keptPairs = edges.iterator.map { case (a, c) => (names(a), names(c)) }.toArray
+    val patternOf: Map[String, Int] =
+      if (!params.includePattern) Map.empty
+      else if (symmetric(params)) {
+        // undirected components numbered by their minimal (first_rid, item)
+        // member: the first member met in output order
+        val label = ConnectedComponents.localUnionFind(keptPairs).toMap
+        val number = mutable.HashMap.empty[String, Int]
+        ordered.map { i =>
+          val it = names(i)
+          it -> number.getOrElseUpdate(label.getOrElse(it, it), number.size + 1)
+        }.toMap
+      } else {
+        requirePatternEdges(edges.size, params.maxPatternEdges)
+        dfsPatterns(ordered.map(names), keptPairs).toMap
+      }
+
+    val out = ordered.map { i =>
+      val t = top(i)
+      val k = if (t == null) 0 else t.n
+      val lift =
+        if (t == null) 0.0
+        else if (params.weighted) liftNum(i) / support(i)
+        else liftNum(i) * support(i) / totalTx
+      Row(names(i), support(i), lift, patternOf.getOrElse(names(i), 0),
+        (0 until k).map(j => t.payloads(j).toString),
+        (0 until k).map(j => t.scores(j)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(out: _*),
+      outputSchema(itemNullable, params.weighted))
   }
 }

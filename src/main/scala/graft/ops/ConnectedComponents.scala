@@ -91,8 +91,9 @@ object ConnectedComponents {
 
   /** Union-find with path halving over a collected edge list; labels are
     * the UTF8-minimal member per component (= Spark's min(string)). Edges
-    * with a null endpoint drop whole, like the distributed id joins. */
-  private def localUnionFind(
+    * with a null endpoint drop whole, like the distributed id joins. Nodes
+    * are listed by first appearance (edge order, `src` before `dst`). */
+  private[graft] def localUnionFind(
       ed: Array[(String, String)]): Array[(String, String)] = {
     val clean = ed.filter { case (a, b) => a != null && b != null }
     val names = {
@@ -280,8 +281,39 @@ object ConnectedComponents {
     * null `from` get sentinel 0 (reference: src/graph_solver.rs:78-100,
     * polars_grouper/__init__.py:246-301). Order-sensitive by design — exact
     * on single-partition input; use [[superMergerCanonical]] at scale.
+    *
+    * @param maxLocalEdges driver-local tier cap (the [[components]]
+    *   default): while the non-null edges fit one capped collect, union-find
+    *   and first-appearance numbering run on the driver and `group` rides a
+    *   broadcast join onto `df`, keeping its row order. Over the cap, or at
+    *   0, the distributed numbering runs, with this cap passed to its inner
+    *   [[components]] call.
     */
-  def superMerger(df: DataFrame, from: String, to: String): DataFrame = {
+  def superMerger(df: DataFrame, from: String, to: String,
+      maxLocalEdges: Long = 5_000_000L): DataFrame = {
+    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
+      val spark = df.sparkSession
+      import spark.implicits._
+      // collect order is row order, so nodes come back by first appearance
+      val capped = Ingest.edges(df, from, to)
+        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
+      if (capped.length <= maxLocalEdges) {
+        // the first root seen while scanning nodes in appearance order gets
+        // the next counter (src/graph_solver.rs:78-89)
+        val number = scala.collection.mutable.HashMap.empty[String, Long]
+        val groups = localUnionFind(capped).toSeq.map { case (node, label) =>
+          (node, number.getOrElseUpdate(label, number.size + 1L))
+        }
+        // a broadcast hash join streams `df` in order: no row index or sort
+        return df
+          .join(broadcast(groups.toDF("__from_node", "group")),
+            col(from).cast("string") === col("__from_node"), "left")
+          .withColumn("group", coalesce(col("group"), lit(0L)))
+          .drop("__from_node")
+      }
+      // over the cap: fall through to the distributed numbering
+    }
+
     val withRid = Ingest.withRowIdx(df, "_rid").persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val e = withRid.select(
@@ -299,7 +331,7 @@ object ConnectedComponents {
         .select(col("np.node"), col("np.pos"))
         .groupBy("node").agg(min("pos").as("first_pos"))
 
-      val comp = components(e.select("src", "dst"))
+      val comp = components(e.select("src", "dst"), maxLocalEdges = maxLocalEdges)
       // group = rank of (min first_pos over the component): reproduces
       // "first root seen while scanning nodes in appearance order gets the
       // next counter" (src/graph_solver.rs:78-89). comp_pos values are

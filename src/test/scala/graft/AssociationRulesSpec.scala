@@ -3,6 +3,7 @@ package graft
 import graft.ops.AssociationRules
 import graft.ops.AssociationRules.Params
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -147,5 +148,68 @@ class AssociationRulesSpec extends AnyFunSuite {
     val rows = run(df, Params(minSupport = 0.0, minConfidence = 0.0,
       includePattern = false)).collect()
     assert(rows.map(_.getInt(3)).toSeq == Seq(0, 0))
+  }
+
+  private val txSchema = StructType(Seq(
+    StructField("transaction_id", LongType), StructField("item_id", StringType),
+    StructField("frequency", DoubleType)))
+
+  /** Both tiers on `df`: the default gate (driver-local at this size) and
+    * eagerMaterializePairVolume = 0 (distributed), compared row for row. */
+  private def assertTiersAgree(df: DataFrame, p: Params, freq: Option[String]): Seq[Row] = {
+    val local = run(df, p, freq)
+    val dist = run(df, p.copy(eagerMaterializePairVolume = 0L), freq)
+    assert(local.queryExecution.logical.isInstanceOf[LocalRelation], p)
+    assert(!dist.queryExecution.logical.isInstanceOf[LocalRelation], p)
+    assert(local.schema == dist.schema, p)
+    val rows = local.collect().toSeq
+    assert(rows == dist.collect().toSeq, p)
+    rows
+  }
+
+  test("driver-local tier ≡ distributed tier on a seeded multi-partition table") {
+    val rnd = new scala.util.Random(11)
+    // non-ASCII names exercise the binary (UTF-8) name order of ties
+    val pool = (0 until 14).map(i => s"i$i") ++ Seq("é", "𝔸", "Z")
+    val rows = (0 until 60).flatMap { t =>
+      // every 9th transaction is oversized; repeated picks give duplicate
+      // (tid, item) rows; frequencies are dyadic so every sum is exact
+      val n = if (t % 9 == 0) 9 else 1 + rnd.nextInt(5)
+      Seq.fill(n)(Row(t.toLong, pool(rnd.nextInt(pool.length)), (1 + rnd.nextInt(6)) * 0.25))
+    } ++ Seq(Row(null, "i1", 1.0), Row(3L, null, 1.0), Row(4L, "i2", null))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), txSchema)
+    val cases = Seq(
+      Params(minSupport = 0.05, minConfidence = 0.0, maxItemsetSize = 6),  // symmetric
+      Params(minSupport = 0.05, minConfidence = 0.15, maxItemsetSize = 6), // directed
+      Params(minSupport = 0.02, minConfidence = 0.1, maxItemsetSize = 6, weighted = true),
+      Params(minSupport = 0.0, minConfidence = 0.0, maxItemsetSize = 6, weighted = true),
+      Params(minSupport = 0.02, minConfidence = 0.05, maxItemsetSize = 6,
+        weighted = true, includePattern = false))
+    for (p <- cases; fa <- Seq(true, false); freq <- Seq(Some("frequency"), None)) {
+      val out = assertTiersAgree(df, p.copy(firstAppearanceOrder = fa), freq)
+      assert(out.nonEmpty && out.exists(_.getSeq[String](4).nonEmpty))
+    }
+    // confidence ties reach the top-5: unweighted scores repeat per antecedent
+    val tied = assertTiersAgree(df, cases(0), None)
+    assert(tied.exists(r => r.getSeq[Double](5).distinct.length < r.getSeq[Double](5).length))
+    assert(tied.exists(_.getSeq[String](4).length == 5))
+
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], txSchema)
+    assert(assertTiersAgree(empty, Params(), Some("frequency")).isEmpty)
+  }
+
+  test("maxPatternEdges = Int.MaxValue disables the cap on both tiers; a small cap fails on both") {
+    val df = Seq(
+      (1L, "A", 1.0), (1L, "B", 1.0), (1L, "C", 1.0), (2L, "A", 1.0))
+      .toDF("transaction_id", "item_id", "frequency")
+    val p = Params(minSupport = 0.0, minConfidence = 0.0, weighted = true)
+    val rows = assertTiersAgree(df, p.copy(maxPatternEdges = Int.MaxValue), Some("frequency"))
+    assert(rows.map(_.getInt(3)) == Seq(1, 1, 1))
+    for (vol <- Seq(p.eagerMaterializePairVolume, 0L)) {
+      val ex = intercept[IllegalArgumentException] {
+        run(df, p.copy(maxPatternEdges = 2, eagerMaterializePairVolume = vol)).collect()
+      }
+      assert(ex.getMessage.contains("maxPatternEdges"))
+    }
   }
 }

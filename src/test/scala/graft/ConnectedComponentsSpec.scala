@@ -82,4 +82,28 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(viaGraphX == viaStars)
     assert(viaGraphX.nonEmpty)
   }
+
+  test("superMerger local tier ≡ distributed tier (maxLocalEdges = 0), row order kept") {
+    val rnd = new scala.util.Random(7)
+    def node() = if (rnd.nextInt(25) == 0) null else s"n${rnd.nextInt(400)}"
+    // null from/to, a `from` seen nowhere else (sentinel 0) and integer
+    // node ids cast to string, over four partitions
+    val rows = (0 until 300).map(i => Row(i.toLong, node(), node())) ++
+      Seq(Row(300L, "lonely", null), Row(301L, null, null))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("from", StringType), StructField("to", StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val local = ConnectedComponents.superMerger(df, "from", "to")
+    val dist = ConnectedComponents.superMerger(df, "from", "to", maxLocalEdges = 0L)
+    assert(local.schema == dist.schema)
+    val got = local.collect().toSeq
+    assert(got == dist.collect().toSeq)
+    assert(got.map(_.getLong(0)) == (0L to 301L))
+    assert(got.takeRight(2).map(_.getLong(3)) == Seq(0L, 0L))
+    assert(got.map(_.getLong(3)).max > 1L)
+
+    val ints = (0 until 200).map(i => (i % 37, (i * 7) % 53)).toDF("from", "to")
+    assert(ConnectedComponents.superMerger(ints, "from", "to").collect().toSeq ==
+      ConnectedComponents.superMerger(ints, "from", "to", maxLocalEdges = 0L).collect().toSeq)
+  }
 }
