@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Cross-document duplicated-span mining — the position-level view of
   * corpus duplication that document- and passage-level dedup cannot give:
@@ -74,7 +77,7 @@ object DupSpans {
               array<struct<pos: bigint, gram: string>>)
             END""")).as("g"))
       .select(col("doc_id"), col("g.pos").as("pos"), col("g.gram").as("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val dupGrams = grams.groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .where(col("n_docs") >= minDocs)
@@ -125,15 +128,30 @@ object DupSpans {
     *
     * Output: (doc_id, start_pos, span_tokens), one row per maximal
     * merged span.
+    *
+    * @param maxLocalTokens driver-local tier cap on the token count over
+    *   non-null texts: within it one probe and one collect bring
+    *   the (id, text) rows to the driver, which replays the same pipeline
+    *   — Spark's own `UTF8String.split`, the same 60-bit md5 lanes, the
+    *   same containment mask and interval merge — and returns a
+    *   LocalRelation with the distributed schema. Null or duplicate ids
+    *   (which the distributed windows merge), ids that are neither
+    *   integral nor string, and anything over the cap fall through to the
+    *   distributed tier; 0 forces it.
     */
   def dupSpansMulti(df: DataFrame, idCol: String, textCol: String,
-      resolutions: Seq[(Int, Int)] = Seq((4, 4), (8, 3), (16, 2))): DataFrame = {
+      resolutions: Seq[(Int, Int)] = Seq((4, 4), (8, 3), (16, 2)),
+      maxLocalTokens: Long = 5_000_000L): DataFrame = {
     require(resolutions.nonEmpty, "at least one (n, minDocs) resolution")
     require(resolutions.map(_._1).distinct.size == resolutions.size,
       s"duplicate gram lengths in $resolutions")
     resolutions.foreach { case (n, m) =>
       require(n >= 2 && n <= 16, s"n must be in [2, 16], got $n")
       require(m >= 2, s"minDocs must be >= 2, got $m")
+    }
+    if (maxLocalTokens > 0) localSpans(df, idCol, textCol, resolutions, maxLocalTokens) match {
+      case Some(local) => return local
+      case None => // over the cap or a contract edge: distributed tier
     }
     // CONTAINMENT PRE-FILTER (r12, VERDICT r11 item 4). The containment
     // theorem cuts both ways: it makes equal thresholds degenerate (the
@@ -164,7 +182,7 @@ object DupSpans {
     val docsArr = Similarity.widen(df
       .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__arr")),
       "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     def md5Lane(c: org.apache.spark.sql.Column) =
       graft.functions.functions.hex_to_long(substring(md5(c), 1, 15))
     // pass A: finest grams, hashed map-side (the 60-bit md5 lane — shuffle
@@ -191,7 +209,7 @@ object DupSpans {
     // the duplicated fraction of the token table.
     val dup0 = grams0.join(counts0, "gh")
       .select(col("doc_id"), col("pos"), col("n_docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val finestIntervals = dup0.where(col("n_docs") >= m0)
       .select(col("doc_id"), col("pos").as("s"),
         (col("pos") + lit(n0 - 1)).cast("long").as("e"))
@@ -224,20 +242,28 @@ object DupSpans {
       // materialize the wide grams at candidate positions only: join back
       // to the token arrays (docs shuffled once by id, candidate rows are
       // 16 bytes) and slice — the full-corpus explode of ~100-byte
-      // n-grams never happens
+      // n-grams never happens. Persisted: it feeds the count and the
+      // survivor semi-join, so the grams are built once.
       val candGrams = cands.join(docsArr, "doc_id")
         .select(col("doc_id"), col("pos"), col("__n"), col("__m"),
           md5Lane(array_join(
             slice(col("__arr"), (col("pos") + lit(1)).cast("int"),
               col("__n")), " "))
             .as("gh"))
-      Seq(candGrams.groupBy(col("__n"), col("__m"), col("gh"))
-        .agg(countDistinct(col("doc_id")).as("nd"),
-          collect_list(struct(col("doc_id"), col("pos"))).as("ps"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // Bounded survivor buffer: surviving (n, gh) keys come from a
+      // distinct-doc count (planned as a (key, doc_id) dedup plus a
+      // counter, so per-key state is O(1)) and candidates return through
+      // a left-semi join on (n, gh) whose build side holds one row per
+      // surviving key. A gram shared by millions of positions streams
+      // through both; no per-key position list is ever buffered.
+      val survivors = candGrams.groupBy(col("__n"), col("__m"), col("gh"))
+        .agg(countDistinct(col("doc_id")).as("nd"))
         .where(col("nd") >= col("__m"))
-        .select(col("__n"), explode(col("ps")).as("p"))
-        .select(col("p.doc_id").as("doc_id"), col("p.pos").as("s"),
-          (col("p.pos") + col("__n") - lit(1)).cast("long").as("e")))
+        .select(col("__n"), col("gh"))
+      Seq(candGrams.join(survivors, Seq("__n", "gh"), "left_semi")
+        .select(col("doc_id"), col("pos").as("s"),
+          (col("pos") + col("__n") - lit(1)).cast("long").as("e")))
     }
     val intervals = (finestIntervals +: longIntervals).reduce(_ union _)
       .distinct() // resolutions overlap heavily; dedupe before the window
@@ -255,5 +281,81 @@ object DupSpans {
         max(col("e")).cast("long").as("__end"))
       .select(col("doc_id"), col("start_pos"),
         (col("__end") - col("start_pos") + 1L).as("span_tokens"))
+  }
+
+  /** [[dupSpansMulti]]'s driver-local tier, or None when it must not run.
+    * One probe of the token count, then — only within the cap — one
+    * collect of the non-null-text rows (null texts yield no grams on
+    * either tier). The replay follows the distributed steps: finest-gram
+    * lanes with distinct-doc counts, the m = 2 containment mask, longer
+    * grams hashed only at fully masked starts, per-resolution thresholds,
+    * and intervals merged so a span starts only when s > max(prev e) + 1
+    * — i.e. maximal runs of covered tokens. */
+  private def localSpans(df: DataFrame, idCol: String, textCol: String,
+      resolutions: Seq[(Int, Int)], cap: Long): Option[DataFrame] = {
+    val in = df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val idField = in.schema("doc_id")
+    val idOk = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
+    if (!idOk(idField.dataType) || in.schema("text").dataType != StringType) return None
+    // split(text, " ") yields one token more than the text has spaces
+    val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
+      r => r.getString(1).count(_ == ' ') + 1L).getOrElse(return None)
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    if (!rows.forall(r => !r.isNullAt(0) && seen.add(r.get(0)))) return None
+
+    val space = UTF8String.fromString(" ")
+    val texts = rows.map(r => UTF8String.fromString(r.getString(1)))
+    // token byte offsets: token k spans [off(k), off(k + 1) - 1) of the text
+    val offs = texts.map(_.split(space, -1).scanLeft(0)((o, tok) => o + tok.numBytes + 1))
+    val bytes = texts.map(_.getBytes)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    // the 60-bit lane of the n-gram at p: hex_to_long(substring(md5(g), 1, 15))
+    def lane(d: Int, p: Int, n: Int): Long = {
+      md.update(bytes(d), offs(d)(p), offs(d)(p + n) - offs(d)(p) - 1)
+      java.nio.ByteBuffer.wrap(md.digest()).getLong >>> 4
+    }
+    def nTok(d: Int) = offs(d).length - 1
+    // (start, distinct-doc count) of each doc's n-grams at the given
+    // starts whose lane is shared by >= 2 docs (every threshold is >= 2)
+    def shared(n: Int, starts: Int => Iterator[Int]): IndexedSeq[Array[(Int, Int)]] = {
+      val lanes = rows.indices.map(d => starts(d).map(p => (p, lane(d, p, n))).toArray)
+      val docs = scala.collection.mutable.LongMap.empty[Int]
+      val last = scala.collection.mutable.LongMap.empty[Int]
+      for (d <- rows.indices; (_, h) <- lanes(d) if last.getOrElse(h, -1) != d) {
+        last(h) = d
+        docs(h) = docs.getOrElse(h, 0) + 1
+      }
+      lanes.map(_.collect { case (p, h) if docs(h) >= 2 => (p, docs(h)) })
+    }
+    // per-doc coverage deltas: +1 at s, −1 past e
+    val delta = rows.indices.map(d => new Array[Int](nTok(d) + 1))
+    def cover(n: Int, m: Int, found: IndexedSeq[Array[(Int, Int)]]): Unit =
+      for (d <- rows.indices; (p, c) <- found(d) if c >= m) {
+        delta(d)(p) += 1
+        delta(d)(p + n) -= 1
+      }
+    val n0 = resolutions.map(_._1).min
+    val dup0 = shared(n0, d => (0 to nTok(d) - n0).iterator)
+    val masked = dup0.map(_.map(_._1).toSet)
+    for ((n, m) <- resolutions)
+      cover(n, m, if (n == n0) dup0 else shared(n, d =>
+        dup0(d).iterator.map(_._1).filter(p => (p to p + n - n0).forall(masked(d)))))
+    val out = new java.util.ArrayList[Row]()
+    for (d <- rows.indices) {
+      var c = 0
+      var start = -1
+      for (t <- 0 to nTok(d)) { // every interval has closed by t = nTok
+        c += delta(d)(t)
+        if (c > 0 && start < 0) start = t
+        else if (c == 0 && start >= 0) {
+          out.add(Row(rows(d).get(0), start.toLong, (t - start).toLong))
+          start = -1
+        }
+      }
+    }
+    val schema = StructType(Seq(idField,
+      StructField("start_pos", LongType, nullable = true),
+      StructField("span_tokens", LongType, nullable = true)))
+    Some(df.sparkSession.createDataFrame(out, schema))
   }
 }

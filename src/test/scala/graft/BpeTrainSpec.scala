@@ -1,19 +1,35 @@
 package graft
 
 import graft.ops.BpeTrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 class BpeTrainSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def run(words: Seq[(String, Long)], rounds: Int) = {
-    val (m, r) = BpeTrain.train(words.toDF("w", "n_w"), rounds)
-    (m.orderBy("round").collect().map(x =>
-       (x.getInt(0), x.getString(1), x.getString(2), x.getLong(3))).toSeq,
-     r.orderBy("w", "pos").collect().map(x =>
-       (x.getString(0), x.getInt(1), x.getString(2))).toSeq)
+  /** Trains at the default gate and with the distributed tier forced
+    * (`maxLocalSymbols = 0`), asserts both tiers agree — rows, schemas,
+    * and which tier the default gate chose — and returns the result. */
+  private def tiers(words: DataFrame, rounds: Int, local: Boolean = true) = {
+    val (m, r) = BpeTrain.train(words, rounds)
+    val (dm, dr) = BpeTrain.train(words, rounds, maxLocalSymbols = 0)
+    def rows(m: DataFrame, r: DataFrame) =
+      (m.orderBy("round").collect().map(x =>
+         (x.getInt(0), x.getString(1), x.getString(2), x.getLong(3))).toSeq,
+       r.orderBy("w", "pos").collect().map(x =>
+         (x.getString(0), x.getInt(1), x.getString(2))).toSeq)
+    assert(r.queryExecution.logical.isInstanceOf[LocalRelation] == local)
+    assert(!dr.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(m.schema == dm.schema && r.schema == dr.schema)
+    val got = rows(m, r)
+    assert(got == rows(dm, dr))
+    got
   }
+
+  private def run(words: Seq[(String, Long)], rounds: Int) =
+    tiers(words.toDF("w", "n_w"), rounds)
 
   test("weighted pair counts drive merge order; ties break lexicographically") {
     // "aaab"×2: pairs (a,a)=2·2=4, (a,b)=1·2=2; "ab"×3: (a,b)=3 → (a,b)=5 wins r1.
@@ -70,5 +86,41 @@ class BpeTrainSpec extends AnyFunSuite {
       .groupBy(_.getString(0))
       .map { case (w, rows) => (w, rows.sortBy(_.getInt(1)).map(_.getString(2)).mkString) }
     rebuilt.foreach { case (w, joined) => assert(w == joined, s"word $w") }
+  }
+
+  test("driver-local tier ≡ distributed tier on a seeded multi-partition word table") {
+    // accented and supplementary-plane symbols: code points, not UTF-16
+    // units, and ties where UTF-8 order and String.compareTo disagree
+    val alphabet = Seq("a", "b", "é", "ｆ", "𝔸", "😀")
+    val rnd = new scala.util.Random(7)
+    val words = Seq.fill(120)(Seq.fill(1 + rnd.nextInt(7))(alphabet(rnd.nextInt(6))).mkString)
+      .distinct.map(w => (w, 1L + rnd.nextInt(4)))
+    val df = words.toDF("w", "n_w").repartition(3)
+    for (rounds <- Seq(1, 3)) {
+      val (merges, segs) = tiers(df, rounds)
+      assert(merges.size == rounds)
+      assert(segs.groupBy(_._1).forall { case (w, ss) => ss.map(_._3).mkString == w })
+    }
+  }
+
+  test("code points and UTF-8 tie order on both tiers") {
+    // (ｆ,x) and (𝔸,x) tie at 2: UTF-8 puts U+FF46 before U+1D538, Java's
+    // UTF-16 compareTo the other way round; 𝔸𝔸 is two symbols, not four
+    val (merges, segs) = run(Seq(("ｆx", 2L), ("𝔸x", 2L), ("é𝔸𝔸", 1L)), rounds = 1)
+    assert(merges == Seq((1, "ｆ", "x", 2L)))
+    assert(segs.filter(_._1 == "é𝔸𝔸") == Seq(("é𝔸𝔸", 1, "é"), ("é𝔸𝔸", 2, "𝔸"), ("é𝔸𝔸", 3, "𝔸")))
+  }
+
+  test("empty input trains nothing on both tiers") {
+    assert(run(Seq.empty, rounds = 2) == ((Nil, Nil)))
+  }
+
+  test("null, empty or duplicate words and null counts route to the distributed tier") {
+    for (words <- Seq(
+        Seq(("ab", Some(2L)), (null, Some(3L))),
+        Seq(("ab", Some(2L)), ("", Some(1L))),
+        Seq(("ab", Some(1L)), ("ab", Some(2L))),
+        Seq(("ab", Some(2L)), ("abc", None), ("bc", Some(1L)))))
+      tiers(words.toDF("w", "n_w"), rounds = 1, local = false)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.DupSpans
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 class DupSpansSpec extends AnyFunSuite {
@@ -59,10 +61,28 @@ class DupSpansSpec extends AnyFunSuite {
     }
   }
 
+  /** dupSpansMulti at the default gate and with the distributed tier
+    * forced (`maxLocalTokens = 0`): asserts both tiers agree — rows,
+    * schemas, and which tier the default gate chose — and returns the
+    * rows as (doc_id as string, start_pos, span_tokens). */
+  private def tiers(df: DataFrame, res: Seq[(Int, Int)], local: Boolean = true)
+      : Seq[(String, Long, Long)] = {
+    val got = DupSpans.dupSpansMulti(df, "doc_id", "text", res)
+    val dist = DupSpans.dupSpansMulti(df, "doc_id", "text", res, maxLocalTokens = 0)
+    def rows(d: DataFrame) = d.collect().map(r =>
+      (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2))).toSeq.sorted
+    assert(got.queryExecution.logical.isInstanceOf[LocalRelation] == local)
+    assert(!dist.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(got.schema == dist.schema)
+    val out = rows(got)
+    assert(out == rows(dist))
+    out
+  }
+
   private def runMulti(docs: Seq[(Long, String)], res: Seq[(Int, Int)])
       : Set[(Long, Long, Long)] =
-    DupSpans.dupSpansMulti(docs.toDF("doc_id", "text"), "doc_id", "text", res)
-      .as[(Long, Long, Long)].collect().toSet
+    tiers(docs.toDF("doc_id", "text"), res)
+      .map { case (id, s, tk) => (id.toLong, s, tk) }.toSet
 
   test("multi at one resolution covers exactly dupSpans' token set") {
     // the two views agree on COVERED TOKENS; span boundaries may differ —
@@ -131,5 +151,42 @@ class DupSpansSpec extends AnyFunSuite {
     // (4,4) alone would miss the 16-token run entirely
     val shortOnly = runMulti(docs, Seq((4, 4)))
     assert(!shortOnly.exists { case (id, s, tk) => id == 1L && tk >= 16L })
+  }
+
+  test("driver-local tier ≡ distributed tier on a seeded multi-partition corpus") {
+    val vocab = Seq("the", "cat", "naïve", "日本", "𝔸x", "sat", "mat", "on", "a", "b")
+    val rnd = new scala.util.Random(11)
+    val base = Seq.tabulate(30)(i =>
+      (i.toLong, Seq.fill(rnd.nextInt(40))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    // planted copies: a 5..20-token run of one doc pasted into another
+    val planted = Seq.tabulate(12) { i =>
+      val src = base(rnd.nextInt(30))._2.split(" ")
+      val from = rnd.nextInt(math.max(1, src.length - 5))
+      (100L + i, s"head$i " + src.slice(from, from + 5 + rnd.nextInt(16)).mkString(" ") + s" tail$i")
+    }
+    val edges = Seq(
+      (200L, "x"),                       // shorter than every n
+      (201L, "the  cat sat  on"),        // double spaces: empty tokens
+      (202L, " the cat sat on "),        // leading and trailing space
+      (203L, ""),
+      (204L, null),
+      // touching: "t1 t2" shared with 206, "t3 t4" with 207, "t2 t3"
+      // nowhere else, so [0,1] and [2,3] meet at s == e + 1
+      (205L, "t1 t2 t3 t4"), (206L, "t1 t2 q"), (207L, "r t3 t4"),
+      // overlapping: [0,1] and [1,2]
+      (208L, "o1 o2 o3"), (209L, "o1 o2 o3"))
+    val df = (base ++ planted ++ edges).toDF("doc_id", "text").repartition(3)
+    val single = tiers(df, Seq((2, 2)))
+    assert(single.contains(("205", 0L, 4L)) && single.contains(("208", 0L, 3L)))
+    assert(tiers(df, Seq((4, 4), (8, 3), (16, 2))).nonEmpty)
+  }
+
+  test("null or duplicate ids and non-integral ids route to the distributed tier") {
+    val docs = Seq(Some(1L) -> "a b c", None -> "a b c", Some(2L) -> "x a b")
+    tiers(docs.toDF("doc_id", "text"), Seq((2, 2)), local = false)
+    tiers(Seq((1L, "a b c"), (1L, "x a b"), (2L, "a b")).toDF("doc_id", "text"),
+      Seq((2, 2)), local = false)
+    tiers(Seq((1.5, "a b c"), (2.5, "x a b")).toDF("doc_id", "text"),
+      Seq((2, 2)), local = false)
   }
 }
