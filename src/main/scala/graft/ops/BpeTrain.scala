@@ -50,9 +50,15 @@ object BpeTrain {
     *   distributed tier's schemas. Inputs with a null, empty or duplicate
     *   `w`, a null `n_w`, or non-string/non-integral columns fall through
     *   to the distributed tier, as does anything over the cap; 0 forces it.
+    *   The default is measured (`graft.tools.TextTierSweep bpe`, 4 cores,
+    *   3 rounds): at 300k symbols the local tier took 2.6–3.0 s against
+    *   8.1 s distributed and raised the heap by at most ~420 MB; at 1M it
+    *   was still faster (7–8 s against 12–16 s) but needed ~1 GB, mostly
+    *   the segmentation's LocalRelation (about 1 KB per output row across
+    *   its Row, InternalRow and UnsafeRow copies).
     */
   def train(words: DataFrame, rounds: Int,
-      maxLocalSymbols: Long = 5_000_000L): (DataFrame, DataFrame) = {
+      maxLocalSymbols: Long = 300_000L): (DataFrame, DataFrame) = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1, 64], got $rounds")
     val spark = words.sparkSession
     import spark.implicits._

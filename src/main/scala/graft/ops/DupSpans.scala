@@ -130,14 +130,19 @@ object DupSpans {
     * merged span.
     *
     * @param maxLocalTokens driver-local tier cap on the token count over
-    *   non-null texts: within it one probe and one collect bring
-    *   the (id, text) rows to the driver, which replays the same pipeline
-    *   — Spark's own `UTF8String.split`, the same 60-bit md5 lanes, the
-    *   same containment mask and interval merge — and returns a
-    *   LocalRelation with the distributed schema. Null or duplicate ids
-    *   (which the distributed windows merge), ids that are neither
-    *   integral nor string, and anything over the cap fall through to the
-    *   distributed tier; 0 forces it.
+    *   non-null texts, where a text counts at least an eighth of its UTF-8
+    *   bytes (so few-space texts are bounded by size): within it one probe
+    *   and one collect bring the (id, text) rows to the driver, which
+    *   replays the same pipeline — Spark's own `UTF8String.split`, the
+    *   same 60-bit md5 lanes, the same containment mask and interval
+    *   merge — and returns a LocalRelation with the distributed schema.
+    *   Null or duplicate ids (which the distributed windows merge), ids
+    *   that are neither integral nor string, and anything over the cap
+    *   fall through to the distributed tier; 0 forces it. The default is
+    *   measured (`graft.tools.TextTierSweep spans`, 4 cores, 60-token
+    *   docs): at 5M tokens the local tier took 6.6–6.8 s against 12.1 s
+    *   distributed and raised the heap by at most ~460 MB, also in a 1 GB
+    *   heap.
     */
   def dupSpansMulti(df: DataFrame, idCol: String, textCol: String,
       resolutions: Seq[(Int, Int)] = Seq((4, 4), (8, 3), (16, 2)),
@@ -223,10 +228,9 @@ object DupSpans {
     // under countsN and once as the semi-join probe side (profiled at
     // sf0.1/local[32]: four 0.7-1.5 s 32-task stages, the bulk of the
     // query). Now: one window pass computes every resolution's mask count
-    // (same partitioning+ordering, different frames — a single WindowExec),
-    // the candidate sets union into ONE gram materialization keyed by
-    // (n, gh), and survivors come back by exploding the per-group position
-    // list instead of re-evaluating the gram build as a join probe.
+    // (same partitioning+ordering, different frames — a single WindowExec)
+    // and the candidate sets union into ONE persisted gram materialization
+    // keyed by (n, gh), read by both the count and the survivor join.
     // Per-(n, gh) distinct-doc counts and survivor rows are identical to
     // the per-resolution form; thresholds ride along as a literal column.
     val longIntervals = if (rest.isEmpty) Nil else {
@@ -284,30 +288,35 @@ object DupSpans {
   }
 
   /** [[dupSpansMulti]]'s driver-local tier, or None when it must not run.
-    * One probe of the token count, then — only within the cap — one
-    * collect of the non-null-text rows (null texts yield no grams on
-    * either tier). The replay follows the distributed steps: finest-gram
-    * lanes with distinct-doc counts, the m = 2 containment mask, longer
-    * grams hashed only at fully masked starts, per-resolution thresholds,
-    * and intervals merged so a span starts only when s > max(prev e) + 1
-    * — i.e. maximal runs of covered tokens. */
+    * One probe of the size, then — only within the cap — one collect of
+    * the non-null-text rows (null texts yield no grams on either tier). A
+    * text's size is its token count or an eighth of its UTF-8 bytes,
+    * whichever is more ([[textUnits]]), so texts with few spaces are
+    * bounded by their bytes. The replay follows the distributed steps:
+    * finest-gram lanes with distinct-doc counts, the m = 2 containment
+    * mask, longer grams hashed only at fully masked starts, per-resolution
+    * thresholds, and intervals merged so a span starts only when
+    * s > max(prev e) + 1 — i.e. maximal runs of covered tokens. Per-token
+    * state is primitive arrays. */
   private def localSpans(df: DataFrame, idCol: String, textCol: String,
       resolutions: Seq[(Int, Int)], cap: Long): Option[DataFrame] = {
     val in = df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val idField = in.schema("doc_id")
     val idOk = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
     if (!idOk(idField.dataType) || in.schema("text").dataType != StringType) return None
-    // split(text, " ") yields one token more than the text has spaces
-    val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
-      r => r.getString(1).count(_ == ' ') + 1L).getOrElse(return None)
-    val seen = scala.collection.mutable.HashSet.empty[Any]
-    if (!rows.forall(r => !r.isNullAt(0) && seen.add(r.get(0)))) return None
-
+    val (ids, bytes) = {
+      val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
+        r => textUnits(r.getString(1))).getOrElse(return None)
+      val seen = scala.collection.mutable.HashSet.empty[Any]
+      if (!rows.forall(r => !r.isNullAt(0) && seen.add(r.get(0)))) return None
+      (rows.map(_.get(0)),
+        rows.map(_.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    }
+    val nDocs = ids.length
     val space = UTF8String.fromString(" ")
-    val texts = rows.map(r => UTF8String.fromString(r.getString(1)))
     // token byte offsets: token k spans [off(k), off(k + 1) - 1) of the text
-    val offs = texts.map(_.split(space, -1).scanLeft(0)((o, tok) => o + tok.numBytes + 1))
-    val bytes = texts.map(_.getBytes)
+    val offs = bytes.map(b =>
+      UTF8String.fromBytes(b).split(space, -1).scanLeft(0)((o, tok) => o + tok.numBytes + 1))
     val md = java.security.MessageDigest.getInstance("MD5")
     // the 60-bit lane of the n-gram at p: hex_to_long(substring(md5(g), 1, 15))
     def lane(d: Int, p: Int, n: Int): Long = {
@@ -315,40 +324,59 @@ object DupSpans {
       java.nio.ByteBuffer.wrap(md.digest()).getLong >>> 4
     }
     def nTok(d: Int) = offs(d).length - 1
-    // (start, distinct-doc count) of each doc's n-grams at the given
-    // starts whose lane is shared by >= 2 docs (every threshold is >= 2)
-    def shared(n: Int, starts: Int => Iterator[Int]): IndexedSeq[Array[(Int, Int)]] = {
-      val lanes = rows.indices.map(d => starts(d).map(p => (p, lane(d, p, n))).toArray)
-      val docs = scala.collection.mutable.LongMap.empty[Int]
-      val last = scala.collection.mutable.LongMap.empty[Int]
-      for (d <- rows.indices; (_, h) <- lanes(d) if last.getOrElse(h, -1) != d) {
-        last(h) = d
-        docs(h) = docs.getOrElse(h, 0) + 1
+    // (distinct values, run lengths) of a sorted array
+    def runs(sorted: Array[Long]): (Array[Long], Array[Int]) = {
+      val keys = Array.newBuilder[Long]
+      val lens = Array.newBuilder[Int]
+      var i = 0
+      while (i < sorted.length) {
+        var j = i + 1
+        while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+        keys += sorted(i); lens += j - i; i = j
       }
-      lanes.map(_.collect { case (p, h) if docs(h) >= 2 => (p, docs(h)) })
+      (keys.result(), lens.result())
+    }
+    // each doc's n-gram starts (from `starts`) whose lane is shared by
+    // >= 2 docs (every threshold is >= 2), with that distinct-doc count:
+    // the docs' distinct lanes, sorted together, give each lane's count
+    def shared(n: Int, starts: Int => Array[Int]): Array[(Array[Int], Array[Int])] = {
+      val st = Array.tabulate(nDocs)(starts)
+      val lanes = Array.tabulate(nDocs)(d => st(d).map(lane(d, _, n)))
+      val all = lanes.flatMap(l => runs(l.sorted)._1)
+      java.util.Arrays.sort(all)
+      val (keys, docs) = runs(all)
+      Array.tabulate(nDocs) { d =>
+        val c = lanes(d).map(h => docs(java.util.Arrays.binarySearch(keys, h)))
+        val keep = c.indices.filter(c(_) >= 2).toArray
+        (keep.map(st(d)), keep.map(c))
+      }
     }
     // per-doc coverage deltas: +1 at s, −1 past e
-    val delta = rows.indices.map(d => new Array[Int](nTok(d) + 1))
-    def cover(n: Int, m: Int, found: IndexedSeq[Array[(Int, Int)]]): Unit =
-      for (d <- rows.indices; (p, c) <- found(d) if c >= m) {
-        delta(d)(p) += 1
-        delta(d)(p + n) -= 1
+    val delta = Array.tabulate(nDocs)(d => new Array[Int](nTok(d) + 1))
+    def cover(n: Int, m: Int, found: Array[(Array[Int], Array[Int])]): Unit =
+      for (d <- 0 until nDocs; i <- found(d)._1.indices if found(d)._2(i) >= m) {
+        delta(d)(found(d)._1(i)) += 1
+        delta(d)(found(d)._1(i) + n) -= 1
       }
     val n0 = resolutions.map(_._1).min
-    val dup0 = shared(n0, d => (0 to nTok(d) - n0).iterator)
-    val masked = dup0.map(_.map(_._1).toSet)
+    val dup0 = shared(n0, d => Array.range(0, nTok(d) - n0 + 1))
+    val masked = Array.tabulate(nDocs) { d =>
+      val mask = new Array[Boolean](nTok(d))
+      dup0(d)._1.foreach(mask(_) = true)
+      mask
+    }
     for ((n, m) <- resolutions)
-      cover(n, m, if (n == n0) dup0 else shared(n, d =>
-        dup0(d).iterator.map(_._1).filter(p => (p to p + n - n0).forall(masked(d)))))
+      cover(n, m, if (n == n0) dup0 else shared(n, d => dup0(d)._1.filter(p =>
+        p + n <= nTok(d) && (p to p + n - n0).forall(masked(d)))))
     val out = new java.util.ArrayList[Row]()
-    for (d <- rows.indices) {
+    for (d <- 0 until nDocs) {
       var c = 0
       var start = -1
       for (t <- 0 to nTok(d)) { // every interval has closed by t = nTok
         c += delta(d)(t)
         if (c > 0 && start < 0) start = t
         else if (c == 0 && start >= 0) {
-          out.add(Row(rows(d).get(0), start.toLong, (t - start).toLong))
+          out.add(Row(ids(d), start.toLong, (t - start).toLong))
           start = -1
         }
       }
@@ -357,5 +385,21 @@ object DupSpans {
       StructField("start_pos", LongType, nullable = true),
       StructField("span_tokens", LongType, nullable = true)))
     Some(df.sparkSession.createDataFrame(out, schema))
+  }
+
+  /** A text's size under `maxLocalTokens`: its token count (one more than
+    * its spaces, as `split(text, " ")` gives) or an eighth of its UTF-8
+    * bytes, whichever is more. */
+  private[graft] def textUnits(t: String): Long = {
+    var spaces = 0L
+    var bytes = 0L
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (c == ' ') spaces += 1
+      bytes += (if (c < 0x80) 1 else if (c < 0x800 || Character.isSurrogate(c)) 2 else 3)
+      i += 1
+    }
+    math.max(spaces + 1, (bytes + 7) / 8)
   }
 }

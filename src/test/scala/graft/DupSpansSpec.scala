@@ -61,13 +61,13 @@ class DupSpansSpec extends AnyFunSuite {
     }
   }
 
-  /** dupSpansMulti at the default gate and with the distributed tier
+  /** dupSpansMulti at the given gate (default: the default gate) and with the distributed tier
     * forced (`maxLocalTokens = 0`): asserts both tiers agree — rows,
     * schemas, and which tier the default gate chose — and returns the
     * rows as (doc_id as string, start_pos, span_tokens). */
-  private def tiers(df: DataFrame, res: Seq[(Int, Int)], local: Boolean = true)
-      : Seq[(String, Long, Long)] = {
-    val got = DupSpans.dupSpansMulti(df, "doc_id", "text", res)
+  private def tiers(df: DataFrame, res: Seq[(Int, Int)], local: Boolean = true,
+      cap: Long = 5_000_000L): Seq[(String, Long, Long)] = {
+    val got = DupSpans.dupSpansMulti(df, "doc_id", "text", res, maxLocalTokens = cap)
     val dist = DupSpans.dupSpansMulti(df, "doc_id", "text", res, maxLocalTokens = 0)
     def rows(d: DataFrame) = d.collect().map(r =>
       (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2))).toSeq.sorted
@@ -188,5 +188,16 @@ class DupSpansSpec extends AnyFunSuite {
       Seq((2, 2)), local = false)
     tiers(Seq((1.5, "a b c"), (2.5, "x a b")).toDF("doc_id", "text"),
       Seq((2, 2)), local = false)
+  }
+
+  test("a long text with few spaces is bounded by its bytes, not its tokens") {
+    // 4 tokens but 1606 UTF-8 bytes: 201 units, over a cap of 100
+    val long = "é" * 800 + " a b c"
+    assert(DupSpans.textUnits(long) == 201L)
+    assert(DupSpans.textUnits("a b  c") == 4L)
+    assert(DupSpans.textUnits("\uD835\uDD38" * 4) == 2L) // 16 bytes, 1 token
+    val df = Seq((1L, long), (2L, "x a b c"), (3L, "a b c")).toDF("doc_id", "text")
+    tiers(df, Seq((2, 2)), local = false, cap = 100)
+    tiers(df, Seq((2, 2)), cap = 250)
   }
 }
