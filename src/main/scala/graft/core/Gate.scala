@@ -22,4 +22,21 @@ object Gate {
     }.fold(0L)(_ + _)
     if (total > cap) None else Some(rdd.collect())
   }
+
+  /** A text's size under a text gate: its token count (one more than its
+    * spaces, as `split(text, " ")` gives) or an eighth of its UTF-8 bytes,
+    * whichever is more, so texts with few spaces are bounded by their
+    * bytes. */
+  def textUnits(t: String): Long = {
+    var spaces = 0L
+    var bytes = 0L
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (c == ' ') spaces += 1
+      bytes += (if (c < 0x80) 1 else if (c < 0x800 || Character.isSurrogate(c)) 2 else 3)
+      i += 1
+    }
+    math.max(spaces + 1, (bytes + 7) / 8)
+  }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.storage.StorageLevel
 /** Document deduplication for large-scale training-data pipelines.
   *
   * All variants are pure column algebra / shuffle SQL — no driver-side
-  * state — so they scale with the cluster:
+  * state, apart from [[minHashLshPairs]]' size-gated driver-local tier for
+  * small corpora — so they scale with the cluster:
   *
   *   - [[exactDuplicates]]      content-hash groupBy (one shuffle)
   *   - [[ngramJaccardPairs]]    exact word-n-gram Jaccard via shingle
@@ -69,9 +70,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * once per row (the O(tokens²) re-tokenizing-in-lambda variant the r2
     * note warned about is not this), and (id, shingle) pairs are already
     * distinct per row after array_distinct, so the global distinct folds
-    * away. A/B on sf0.1 documents (tools/ShingleBench, identical output
-    * verified by symmetric except): window 1.16 s vs projection 0.78 s
-    * per warm build, 4.9 vs 1.6 cold. The gated [[Similarity.widen]]
+    * away. A/B on sf0.1 documents (identical output verified by symmetric
+    * except; numbers in OPTIMIZATION_r12.md): window 1.16 s vs projection
+    * 0.78 s per warm build, 4.9 vs 1.6 cold. The gated [[Similarity.widen]]
     * keeps the per-row gram work off a lone scan task when a small file
     * yields fewer splits than cores — a no-op at real scale.
     *
@@ -505,11 +506,36 @@ object Dedup extends org.apache.spark.internal.Logging {
     * band become candidates; candidates are verified with exact n-gram
     * Jaccard >= threshold. At scale only band-bucket collisions are ever
     * joined — never all pairs.
+    *
+    * @param maxLocalTokens driver-local tier cap on the token count over
+    *   non-null texts, a text counting at least an eighth of its UTF-8
+    *   bytes ([[graft.core.Gate.textUnits]]): within it one probe and one
+    *   collect bring the (id, text) rows to the driver, which replays the
+    *   same candidate/verify join — shingles from Spark's own
+    *   `UTF8String.split`, the same seeded xxhash64 signatures and band
+    *   buckets, the same hot-bucket drop and warning, exact Jaccard over
+    *   the shingle strings — and returns a LocalRelation with the
+    *   distributed schema. Duplicate ids (whose rows the distributed
+    *   `groupBy(id)` merges), ids that are neither integral nor string, a
+    *   text column that is not a string, n < 1, and anything over the cap
+    *   fall through to the distributed tier; 0 forces it. The local pass
+    *   holds every document's distinct shingle set, so the default is
+    *   lower than [[DupSpans.dupSpansMulti]]'s; it is measured
+    *   (`graft.tools.TextTierSweep minhash`, 4 cores, 60-token docs with
+    *   planted near copies, 1 GB heap): at 2.5M tokens the local tier
+    *   took 4.7 s against 7.2 s distributed and raised the heap by at most
+    *   ~380 MB; at 5M it was 11.2 s against 12.2 s at ~505 MB.
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
+      threshold: Double = 0.8, maxBucketSize: Int = 1000,
+      maxLocalTokens: Long = 2_500_000L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
+    if (maxLocalTokens > 0 && n >= 1) localMinHashPairs(df, idCol, textCol, n,
+        numHashes, bands, threshold, maxBucketSize, maxLocalTokens) match {
+      case Some(local) => return local
+      case None => // over the cap or a contract edge: distributed tier
+    }
     val rowsPerBand = numHashes / bands
     // one persisted shingle set feeds signatures AND exact verification
     val sh = shingles(df, idCol, textCol, n).persist(StorageLevel.MEMORY_AND_DISK)
@@ -532,6 +558,126 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     verifyJaccard(sh, threshold, candidates)
+  }
+
+  /** [[minHashLshPairs]]'s driver-local tier, or None when it must not run.
+    * One probe of the size, then — only within the cap — one collect of
+    * the non-null-text rows (a null text has no shingle on either tier).
+    * A document's shingles are views into its UTF-8 bytes: joining tokens
+    * p..p+n−1 of `split(text, " ")` with ' ' is exactly the text's bytes
+    * from token p's start to token p+n−1's end, so no shingle is copied.
+    * Each set is sorted in UTF-8 order and made distinct, which also makes
+    * the exact intersection a merge. Signatures, band buckets (a bucket
+    * counts every document in it, a null id too), the hot-bucket cap and
+    * id order (integral, or [[graft.core.Utf8Order]] for strings) follow
+    * the distributed expressions. */
+  private def localMinHashPairs(df: DataFrame, idCol: String, textCol: String,
+      n: Int, numHashes: Int, bands: Int, threshold: Double, maxBucketSize: Int,
+      cap: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val in = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    val idField = in.schema("id")
+    val idOk = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
+    if (!idOk(idField.dataType) || in.schema("text").dataType != StringType) return None
+    val space = UTF8String.fromString(" ")
+    val (ids, sets) = {
+      val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
+        r => graft.core.Gate.textUnits(r.getString(1))).getOrElse(return None)
+      val seen = scala.collection.mutable.HashSet.empty[Any]
+      if (!rows.forall(r => seen.add(r.get(0)))) return None
+      (rows.map(_.get(0)), rows.map { r =>
+        val b = r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val toks = UTF8String.fromBytes(b).split(space, -1)
+        val sh =
+          if (toks.length < n) Array(UTF8String.fromBytes(b))
+          else {
+            val offs = toks.scanLeft(0)((o, t) => o + t.numBytes + 1)
+            Array.tabulate(toks.length - n + 1)(p =>
+              UTF8String.fromBytes(b, offs(p), offs(p + n) - offs(p) - 1))
+          }
+        // sorted by UTF8String.compareTo, so the intersections below merge
+        java.util.Arrays.sort(sh.asInstanceOf[Array[AnyRef]])
+        sh.distinct
+      })
+    }
+    val nDocs = ids.length
+    // id order as a rank: ids are distinct, a null id takes no pair
+    val byId = ids.indices.filter(ids(_) != null).toArray
+    val sortedIds =
+      if (idField.dataType == StringType)
+        byId.sortWith((a, b) => graft.core.Utf8Order.lt(ids(a).asInstanceOf[String],
+          ids(b).asInstanceOf[String]))
+      else byId.sortBy(ids(_).asInstanceOf[Number].longValue)
+    val rank = Array.fill(nDocs)(-1)
+    sortedIds.indices.foreach(i => rank(sortedIds(i)) = i)
+    // mh_i = min over shingles of xxhash64(int i, xxhash64(shingle)), seed
+    // 42; band bucket = xxhash64(mh_{b·r}, …, mh_{b·r+r−1}) — XxHash64
+    // folds its children left to right, each hash seeding the next
+    val rowsPerBand = numHashes / bands
+    val hashSeeds = Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
+    val keys = Array.ofDim[Long](bands, nDocs)
+    val mh = new Array[Long](numHashes)
+    for (d <- 0 until nDocs) {
+      java.util.Arrays.fill(mh, Long.MaxValue)
+      sets(d).foreach { s =>
+        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+        var i = 0
+        while (i < numHashes) {
+          mh(i) = math.min(mh(i), XXH64.hashLong(h, hashSeeds(i)))
+          i += 1
+        }
+      }
+      for (b <- 0 until bands)
+        keys(b)(d) = (0 until rowsPerBand).foldLeft(42L)((h, r) =>
+          XXH64.hashLong(mh(b * rowsPerBand + r), h))
+    }
+    // candidate pairs (lower-id doc << 32 | higher-id doc) from every bucket
+    // within the cap
+    val cands = scala.collection.mutable.HashSet.empty[Long]
+    var nHot = 0L
+    var dropped = 0L
+    for (b <- 0 until bands) {
+      val k = keys(b)
+      val order = Array.range(0, nDocs).sortBy(k(_))
+      var i = 0
+      while (i < nDocs) {
+        var j = i + 1
+        while (j < nDocs && k(order(j)) == k(order(i))) j += 1
+        if (maxBucketSize > 0 && j - i > maxBucketSize) { nHot += 1; dropped += j - i }
+        else for (x <- i until j; y <- x + 1 until j) {
+          val (p, q) = (order(x), order(y))
+          if (rank(p) >= 0 && rank(q) >= 0)
+            cands += (if (rank(p) < rank(q)) p.toLong << 32 | q else q.toLong << 32 | p)
+        }
+        i = j
+      }
+    }
+    if (nHot > 0)
+      logWarning(s"[minHashLshPairs] dropping $nHot hot buckets " +
+        s"(> $maxBucketSize rows each, $dropped bucket rows total) " +
+        "from candidate generation")
+    val out = new java.util.ArrayList[Row]()
+    cands.foreach { c =>
+      val (a, b) = ((c >>> 32).toInt, c.toInt)
+      val (sa, sb) = (sets(a), sets(b))
+      var i = 0
+      var j = 0
+      var inter = 0L
+      while (i < sa.length && j < sb.length) {
+        val cmp = sa(i).compareTo(sb(j))
+        if (cmp == 0) inter += 1
+        if (cmp <= 0) i += 1
+        if (cmp >= 0) j += 1
+      }
+      val jaccard = inter.toDouble / (sa.length + sb.length - inter)
+      if (jaccard >= threshold) out.add(Row(ids(a), ids(b), jaccard))
+    }
+    Some(df.sparkSession.createDataFrame(out, StructType(Seq(
+      idField.copy(name = "id_a"), idField.copy(name = "id_b"),
+      StructField("jaccard", DoubleType, nullable = true)))))
   }
 
   /** Deterministic per-seed multipliers for the portable MinHash family,

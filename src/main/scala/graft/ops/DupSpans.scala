@@ -290,9 +290,8 @@ object DupSpans {
   /** [[dupSpansMulti]]'s driver-local tier, or None when it must not run.
     * One probe of the size, then — only within the cap — one collect of
     * the non-null-text rows (null texts yield no grams on either tier). A
-    * text's size is its token count or an eighth of its UTF-8 bytes,
-    * whichever is more ([[textUnits]]), so texts with few spaces are
-    * bounded by their bytes. The replay follows the distributed steps:
+    * text's size is [[graft.core.Gate.textUnits]]. The replay follows the
+    * distributed steps:
     * finest-gram lanes with distinct-doc counts, the m = 2 containment
     * mask, longer grams hashed only at fully masked starts, per-resolution
     * thresholds, and intervals merged so a span starts only when
@@ -306,7 +305,7 @@ object DupSpans {
     if (!idOk(idField.dataType) || in.schema("text").dataType != StringType) return None
     val (ids, bytes) = {
       val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
-        r => textUnits(r.getString(1))).getOrElse(return None)
+        r => graft.core.Gate.textUnits(r.getString(1))).getOrElse(return None)
       val seen = scala.collection.mutable.HashSet.empty[Any]
       if (!rows.forall(r => !r.isNullAt(0) && seen.add(r.get(0)))) return None
       (rows.map(_.get(0)),
@@ -385,21 +384,5 @@ object DupSpans {
       StructField("start_pos", LongType, nullable = true),
       StructField("span_tokens", LongType, nullable = true)))
     Some(df.sparkSession.createDataFrame(out, schema))
-  }
-
-  /** A text's size under `maxLocalTokens`: its token count (one more than
-    * its spaces, as `split(text, " ")` gives) or an eighth of its UTF-8
-    * bytes, whichever is more. */
-  private[graft] def textUnits(t: String): Long = {
-    var spaces = 0L
-    var bytes = 0L
-    var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == ' ') spaces += 1
-      bytes += (if (c < 0x80) 1 else if (c < 0x800 || Character.isSurrogate(c)) 2 else 3)
-      i += 1
-    }
-    math.max(spaces + 1, (bytes + 7) / 8)
   }
 }

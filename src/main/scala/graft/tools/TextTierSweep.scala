@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
-/** Sizes the driver-local tiers of `BpeTrain.train` and
-  * `DupSpans.dupSpansMulti`: on seeded generated inputs of growing size it
+/** Sizes the driver-local tiers of `BpeTrain.train`,
+  * `DupSpans.dupSpansMulti`, `Dedup.minHashLshPairs` and
+  * `Tokenizer.tokenStats`: on seeded generated inputs of growing size it
   * times each operator with the local tier forced (gate at Long.MaxValue)
   * and with the distributed tier forced (gate at 0), and records the
   * largest heap in use after any garbage collection during the call, less
@@ -20,10 +21,14 @@ import scala.jdk.CollectionConverters._
   *   - spans: 60-token documents over a 5000-word Zipf vocabulary, every
   *     fifth one pasting a 20-token run of an earlier document, until the
   *     token count reaches the size; the default three resolutions.
+  *   - minhash: the same documents, every fifth one instead a copy of an
+  *     earlier document with 3 of its tokens replaced; n = 3, 64 hashes,
+  *     16 bands, threshold 0.5 (the benchmark's settings).
+  *   - tokenstats: the spans documents; the default vocabulary.
   *
   * Inputs are cached in 4 partitions before timing; each call's outputs
   * are consumed by a hash sum over every column. Usage:
-  *   SPARK_DRIVER_MEM=2g sbt "runMain graft.tools.TextTierSweep bpe|spans [local|distributed] SIZE..."
+  *   SPARK_DRIVER_MEM=2g sbt "runMain graft.tools.TextTierSweep bpe|spans|minhash|tokenstats [local|distributed] SIZE..."
   * (both tiers unless one is named).
   * Prints one JSON line per (op, size, tier): the faster of two calls'
   * seconds, the larger of their heap figures, and the output digest.
@@ -67,7 +72,7 @@ object TextTierSweep {
     seen.toSeq.toDF("w", "n_w")
   }
 
-  def spanDocs(spark: SparkSession, size: Long): DataFrame = {
+  def spanDocs(spark: SparkSession, size: Long, nearCopies: Boolean = false): DataFrame = {
     import spark.implicits._
     val rnd = new java.util.SplittableRandom(7)
     // Zipf(1) over 5000 words by inverse CDF
@@ -82,7 +87,10 @@ object TextTierSweep {
       val d = Array.fill(60)(word())
       if (docs.size % 5 == 4) {
         val src = docs(rnd.nextInt(docs.size))
-        System.arraycopy(src, rnd.nextInt(40), d, rnd.nextInt(40), 20)
+        if (nearCopies) {
+          System.arraycopy(src, 0, d, 0, 60)
+          (1 to 3).foreach(_ => d(rnd.nextInt(60)) = word())
+        } else System.arraycopy(src, rnd.nextInt(40), d, rnd.nextInt(40), 20)
       }
       docs += d
       tokens += 60
@@ -109,8 +117,17 @@ object TextTierSweep {
       case "spans" =>
         consume(graft.ops.DupSpans.dupSpansMulti(input, "doc_id", "text",
           maxLocalTokens = gate))
+      case "minhash" =>
+        consume(graft.ops.Dedup.minHashLshPairs(input, "doc_id", "text", 3, 64, 16, 0.5,
+          maxLocalTokens = gate))
+      case "tokenstats" =>
+        consume(graft.ops.Tokenizer.tokenStats(input, "doc_id", "text",
+          maxLocalTokens = gate))
     }
-    def gen(size: Long) = (if (op == "bpe") bpeWords(spark, size) else spanDocs(spark, size))
+    def gen(size: Long) = (op match {
+      case "bpe" => bpeWords(spark, size)
+      case _ => spanDocs(spark, size, nearCopies = op == "minhash")
+    })
       .repartition(4).persist(StorageLevel.MEMORY_AND_DISK)
     val tiers = Seq("local" -> Long.MaxValue, "distributed" -> 0L)
       .filter { case (t, _) => only.isEmpty || only(t) }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -164,6 +166,78 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // pair is exact-verified, so lsh ⊆ exact always
     assert(lsh.subsetOf(exact))
     assert(lsh == exact, s"missed: ${exact -- lsh}")
+  }
+
+  /** minHashLshPairs at the default gate and with the distributed tier
+    * forced (`maxLocalTokens = 0`): asserts both tiers agree — rows,
+    * schemas, and which tier the default gate chose — and returns the rows
+    * as (id_a as string, id_b as string, jaccard). */
+  private def mhTiers(df: DataFrame, threshold: Double, local: Boolean = true,
+      maxBucketSize: Int = 1000): Seq[(String, String, Double)] = {
+    val got = Dedup.minHashLshPairs(df, "doc_id", "text", 3, 64, 16, threshold,
+      maxBucketSize)
+    val dist = Dedup.minHashLshPairs(df, "doc_id", "text", 3, 64, 16, threshold,
+      maxBucketSize, maxLocalTokens = 0)
+    def rows(d: DataFrame) = d.collect().map(r =>
+      (String.valueOf(r.get(0)), String.valueOf(r.get(1)), r.getDouble(2))).toSeq.sorted
+    assert(got.queryExecution.logical.isInstanceOf[LocalRelation] == local)
+    assert(!dist.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(got.schema == dist.schema)
+    val out = rows(got)
+    assert(out == rows(dist))
+    out
+  }
+
+  test("minHashLshPairs driver-local tier ≡ distributed tier on testdata") {
+    val hi = mhTiers(docs, 0.8)
+    val lo = mhTiers(docs, 0.5)
+    assert(hi.nonEmpty && hi.toSet.subsetOf(lo.toSet))
+  }
+
+  test("minHashLshPairs tiers agree on a seeded corpus and on text edges") {
+    val vocab = Seq("the", "cat", "naïve", "日本", "𝔸x", "sat", "mat", "on", "a", "b", "c", "d")
+    val rnd = new scala.util.Random(5)
+    val base = Seq.tabulate(40)(i =>
+      (i.toLong, Seq.fill(8 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    // planted near copies: one token of an earlier doc replaced
+    val near = Seq.tabulate(15) { i =>
+      val src = base(rnd.nextInt(40))._2.split(" ", -1)
+      src(rnd.nextInt(src.length)) = s"edit$i"
+      (100L + i, src.mkString(" "))
+    }
+    val edges = Seq(
+      (200L, "x y"), (201L, "x y"),      // shorter than n: the whole text
+      (202L, ""), (203L, ""),            // empty texts share the "" shingle
+      (204L, null), (205L, null),        // no shingle at all
+      (206L, "a b a b a b a b"),         // repeated shingles within a doc
+      (207L, "a b a b a b"),
+      (208L, "the  cat sat  on"),        // double spaces: empty tokens
+      (209L, " the cat sat on "))
+    val df = (base ++ near ++ edges).toDF("doc_id", "text").repartition(3)
+    val got = mhTiers(df, 0.5)
+    assert(Seq(("200", "201", 1.0), ("202", "203", 1.0), ("206", "207", 1.0))
+      .forall(got.contains), s"got $got")
+    assert(got.count(_._1.toLong >= 100) >= 2)
+    // maxBucketSize = 2: buckets of three or more docs drop on both tiers,
+    // and a null-id doc counts toward its buckets without pairing
+    val nullId = Seq((Option.empty[Long], "x y")).toDF("doc_id", "text")
+    val capped = mhTiers(df.union(nullId), 0.5, maxBucketSize = 2)
+    assert(!capped.exists(_._1 == "200") && capped.contains(("206", "207", 1.0)))
+  }
+
+  test("minHashLshPairs orders string ids by UTF-8 bytes on both tiers") {
+    // U+FF21 sorts before U+1D538 in UTF-8 bytes, after it in UTF-16
+    val df = Seq(("\uFF21", "one two three four"), ("\uD835\uDD38", "one two three four"),
+        ("b", "one two three five"), ("é", "unrelated words here now"))
+      .toDF("doc_id", "text")
+    assert(mhTiers(df, 0.5) == Seq(("\uFF21", "\uD835\uDD38", 1.0)))
+  }
+
+  test("minHashLshPairs duplicate and double ids route to the distributed tier") {
+    mhTiers(Seq((1L, "a b c d"), (1L, "a b c e"), (2L, "a b c d")).toDF("doc_id", "text"),
+      0.5, local = false)
+    mhTiers(Seq((1.5, "a b c d"), (2.5, "a b c d")).toDF("doc_id", "text"), 0.5,
+      local = false)
   }
 
   test("portable (md5-derived) minhash variant keeps full recall too") {

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.Tokenizer
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 class TokenizerSpec extends AnyFunSuite {
@@ -44,6 +46,56 @@ class TokenizerSpec extends AnyFunSuite {
       (2L, 2L, 2L, "? ?"),
       (3L, 0L, 0L, ""),
       (4L, 10L, 0L, "a a a a a a a a")))
+  }
+
+  /** tokenStats at the default gate and with the distributed tier forced
+    * (`maxLocalTokens = 0`): asserts both tiers agree — rows, schemas, and
+    * which tier the default gate chose — and returns the rows as
+    * (id as string, n_tokens, n_unk, head_toks). */
+  private def tiers(docs: DataFrame, vocab: Seq[String] = Tokenizer.defaultVocab,
+      local: Boolean = true): Seq[(String, Long, Long, String)] = {
+    val got = Tokenizer.tokenStats(docs, "doc_id", "text", vocab)
+    val dist = Tokenizer.tokenStats(docs, "doc_id", "text", vocab, maxLocalTokens = 0)
+    def rows(d: DataFrame) = d.collect().map(r =>
+      (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
+    assert(got.queryExecution.logical.isInstanceOf[LocalRelation] == local)
+    assert(!dist.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(got.schema == dist.schema)
+    val out = rows(got)
+    assert(out == rows(dist))
+    out
+  }
+
+  test("tokenStats driver-local tier ≡ distributed tier on text edges") {
+    val docs = Seq(
+      (Some(1L), "the batch table"), (Some(2L), "xq"), (Some(3L), ""),
+      (Some(4L), "a a a a a a a a a a"),
+      (Some(5L), "İSTANBUL Kİ straẞe ΣΑΣ Σx"), // İ lowercases to i + U+0307
+      (Some(6L), "Mixed CASE w0rds, 42 and-more: the|end"),
+      (Some(7L), null), (None, "the batch"), (None, "x"))
+      .toDF("doc_id", "text").repartition(3)
+    val got = tiers(docs)
+    assert(got.contains(("5", 13L, 1L, "i st an b u l k i")), s"got $got")
+    assert(got.contains(("7", 0L, 0L, "")) && got.count(_._1 == "null") == 2)
+    assert(got.filter(_._1 == "null").forall(_._2 == 0L))
+    // a vocab entry "?" still counts as an unknown token
+    val withUnk = tiers(docs, Tokenizer.defaultVocab :+ "?")
+    assert(withUnk.contains(("2", 2L, 2L, "? ?")))
+    assert(tiers(docs.limit(0)).isEmpty)
+  }
+
+  test("tokenStats tiers agree on testdata, also with a sorted trained vocab") {
+    val docs = Tables("documents")
+    assert(tiers(docs).nonEmpty)
+    val segs = graft.ops.BpeTrain.train(graft.ops.BpeTrain.corpusWords(docs, "text"), rounds = 3)._2
+    val vocab = segs.select("sym").distinct().collect().map(_.getString(0)).toSeq
+    assert(tiers(docs, vocab.sorted).nonEmpty)
+  }
+
+  test("tokenStats duplicate and double ids route to the distributed tier") {
+    tiers(Seq((1L, "the batch"), (1L, "table"), (2L, "x")).toDF("doc_id", "text"),
+      local = false)
+    tiers(Seq((1.5, "the batch"), (2.5, "table")).toDF("doc_id", "text"), local = false)
   }
 
   test("tokenFrequencies: multiplicity-weighted corpus counts") {
