@@ -1,20 +1,32 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.reflect.ClassTag
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Size gate of a driver-local tier. */
 object Gate {
 
-  /** `df`'s rows when Σ size(row) ≤ cap, else None: one probe job, then —
-    * only within the cap — one collect. Both run over the same RDD, so the
-    * shuffles upstream of `df` materialize once and the collect re-reads
+  /** `df`'s rows when Σ size(row) ≤ cap, else None: see the RDD variant. */
+  def collectWithin(df: DataFrame, cap: Long)(size: Row => Long): Option[Array[Row]] =
+    collectWithin(df.rdd, cap)(size)
+
+  /** `rdd`'s elements when Σ size(x) ≤ cap, else None: one probe job, then
+    * — only within the cap — one collect. Both run over the same RDD, so
+    * the shuffles upstream of it materialize once and the collect re-reads
     * their output. Over the cap nothing reaches the driver but the sum,
     * and each probe task stops reading once its own partition is over the
-    * cap; the caller's distributed tier then evaluates `df` again, so an
-    * over-cap call pays one extra pass over `df` (a partial one when
-    * partitions exceed the cap). */
-  def collectWithin(df: DataFrame, cap: Long)(size: Row => Long): Option[Array[Row]] = {
-    val rdd = df.rdd
+    * cap; the caller's distributed tier then evaluates its input again, so
+    * an over-cap call pays one extra pass (a partial one when partitions
+    * exceed the cap). */
+  def collectWithin[T: ClassTag](rdd: RDD[T], cap: Long)(size: T => Long): Option[Array[T]] = {
     val total = rdd.mapPartitions { it =>
       var s = 0L
       while (s <= cap && it.hasNext) s += size(it.next())
@@ -27,16 +39,71 @@ object Gate {
     * spaces, as `split(text, " ")` gives) or an eighth of its UTF-8 bytes,
     * whichever is more, so texts with few spaces are bounded by their
     * bytes. */
-  def textUnits(t: String): Long = {
+  def textUnits(t: UTF8String): Long = {
     var spaces = 0L
-    var bytes = 0L
     var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == ' ') spaces += 1
-      bytes += (if (c < 0x80) 1 else if (c < 0x800 || Character.isSurrogate(c)) 2 else 3)
+    while (i < t.numBytes) {
+      if (t.getByte(i) == ' ') spaces += 1
       i += 1
     }
-    math.max(spaces + 1, (bytes + 7) / 8)
+    math.max(spaces + 1, (t.numBytes + 7L) / 8)
+  }
+
+  /** The least a row counts toward a text gate, however short its text: a
+    * local pass holds per-row state (the collected row, an output row,
+    * per-document arrays) that its token count does not show. The text
+    * caps were measured on 60-token documents, so this bounds a capped
+    * input's rows by the measured row count. Documents of 1–5 tokens show
+    * why (`graft.tools.TextTierSweep tokenstats@1-5`, 1 GB heap): 333k of
+    * them — 1M tokens — raised the heap by 377–455 MB in
+    * `Tokenizer.tokenStats`'s local tier, 1.25M ran it out of memory. */
+  val RowUnits = 60L
+
+  /** The input of a text operator's driver-local tier: `df`'s (id, text)
+    * rows in Spark's internal form — a string id or text as the
+    * `UTF8String` of its stored bytes, so malformed UTF-8 reaches the
+    * local pass exactly as the distributed expressions see it; an
+    * integral id boxed — with the id column's field. None, so the
+    * distributed tier runs, when the id is neither integral nor string,
+    * the text is not a string, an id repeats (the distributed `groupBy`
+    * merges such rows), more than `maxNullIds` ids are null, or
+    * Σ max([[RowUnits]], [[textUnits]]) is over `cap`. Rows with a null
+    * text are dropped unless `nullTexts`; they count [[RowUnits]]. */
+  def collectTexts(df: DataFrame, idCol: String, textCol: String, cap: Long,
+      nullTexts: Boolean, maxNullIds: Int)
+      : Option[(StructField, Array[(Any, UTF8String)])] = {
+    val idField = df.select(col(idCol)).schema.head
+    val idType = idField.dataType
+    val in0 = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    if (!Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)(idType) ||
+        in0.schema("text").dataType != StringType) return None
+    val in = if (nullTexts) in0 else in0.where(col("text").isNotNull)
+    // internal rows are reused by their iterator: copy what is kept
+    val rows = in.queryExecution.toRdd.map { r =>
+      val id = if (r.isNullAt(0)) null
+        else if (idType == StringType) r.getUTF8String(0).clone()
+        else r.get(0, idType)
+      (id: Any, if (r.isNullAt(1)) null else r.getUTF8String(1).clone())
+    }
+    val got = collectWithin(rows, cap) { case (_, t) =>
+      if (t == null) RowUnits else math.max(RowUnits, textUnits(t))
+    }.getOrElse(return None)
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    var nulls = 0
+    if (!got.forall { case (id, _) =>
+      if (id == null) { nulls += 1; nulls <= maxNullIds } else seen.add(id)
+    }) None
+    else Some((idField, got))
+  }
+
+  /** A LocalRelation of `schema` over internal-form rows (strings as
+    * `UTF8String`), kept as compact unsafe rows. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Iterator[InternalRow]): DataFrame = {
+    val proj = UnsafeProjection.create(schema)
+    org.apache.spark.sql.graft.shims.dataFrameOf(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema),
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          rows.map(proj(_).copy(): InternalRow).toArray)))
   }
 }

@@ -509,22 +509,25 @@ object Dedup extends org.apache.spark.internal.Logging {
     *
     * @param maxLocalTokens driver-local tier cap on the token count over
     *   non-null texts, a text counting at least an eighth of its UTF-8
-    *   bytes ([[graft.core.Gate.textUnits]]): within it one probe and one
+    *   bytes ([[graft.core.Gate.textUnits]]) and at least
+    *   [[graft.core.Gate.RowUnits]]: within it one probe and one
     *   collect bring the (id, text) rows to the driver, which replays the
     *   same candidate/verify join — shingles from Spark's own
-    *   `UTF8String.split`, the same seeded xxhash64 signatures and band
-    *   buckets, the same hot-bucket drop and warning, exact Jaccard over
-    *   the shingle strings — and returns a LocalRelation with the
-    *   distributed schema. Duplicate ids (whose rows the distributed
-    *   `groupBy(id)` merges), ids that are neither integral nor string, a
-    *   text column that is not a string, n < 1, and anything over the cap
-    *   fall through to the distributed tier; 0 forces it. The local pass
-    *   holds every document's distinct shingle set, so the default is
-    *   lower than [[DupSpans.dupSpansMulti]]'s; it is measured
-    *   (`graft.tools.TextTierSweep minhash`, 4 cores, 60-token docs with
-    *   planted near copies, 1 GB heap): at 2.5M tokens the local tier
-    *   took 4.7 s against 7.2 s distributed and raised the heap by at most
-    *   ~380 MB; at 5M it was 11.2 s against 12.2 s at ~505 MB.
+    *   `UTF8String.split` over the stored bytes, the same seeded xxhash64
+    *   signatures and band buckets, the same hot-bucket drop and warning,
+    *   exact Jaccard over the shingle bytes — and returns a LocalRelation
+    *   with the distributed schema. Duplicate ids or more than one null id
+    *   (whose rows the distributed `groupBy(id)` merges), ids that are
+    *   neither integral nor string, a text column that is not a string,
+    *   n < 1, more than cap / [[MinHashPairDiv]] candidate pairs (Σ over
+    *   bands of C(bucket size, 2), as exact-duplicate clusters give), and
+    *   anything over the cap fall through to the distributed tier; 0
+    *   forces it. The local pass holds every document's distinct shingle
+    *   set, so the default is lower than [[DupSpans.dupSpansMulti]]'s; it
+    *   is measured (`graft.tools.TextTierSweep minhash`, 4 cores, 60-token
+    *   docs with planted near copies, 1 GB heap): at 2.5M tokens the local
+    *   tier took 2.7–3.1 s against 7.2 s distributed and raised the heap
+    *   by at most ~315 MB; at 5M it was 11.2 s against 12.2 s at ~505 MB.
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -562,54 +565,53 @@ object Dedup extends org.apache.spark.internal.Logging {
 
   /** [[minHashLshPairs]]'s driver-local tier, or None when it must not run.
     * One probe of the size, then — only within the cap — one collect of
-    * the non-null-text rows (a null text has no shingle on either tier).
-    * A document's shingles are views into its UTF-8 bytes: joining tokens
-    * p..p+n−1 of `split(text, " ")` with ' ' is exactly the text's bytes
-    * from token p's start to token p+n−1's end, so no shingle is copied.
-    * Each set is sorted in UTF-8 order and made distinct, which also makes
-    * the exact intersection a merge. Signatures, band buckets (a bucket
-    * counts every document in it, a null id too), the hot-bucket cap and
-    * id order (integral, or [[graft.core.Utf8Order]] for strings) follow
-    * the distributed expressions. */
+    * the non-null-text rows (a null text has no shingle on either tier),
+    * as [[graft.core.Gate.collectTexts]] gives them: the texts' stored
+    * bytes, a document counting at least [[graft.core.Gate.RowUnits]]. A document's
+    * shingles are views into those bytes: joining tokens p..p+n−1 of
+    * `split(text, " ")` with ' ' is exactly the text's bytes from token
+    * p's start to token p+n−1's end, so no shingle is copied. Each set is
+    * sorted in byte order and made distinct, which also makes the exact
+    * intersection a merge. Signatures, band buckets (a bucket counts every
+    * document in it, the null id too — at most one, as the distributed
+    * `groupBy(id)` merges several), the hot-bucket cap and id order
+    * (integral, or `UTF8String` byte order for strings, Spark's own)
+    * follow the distributed expressions. Candidates are enumerated only
+    * when the kept buckets' pairs, Σ C(size, 2) over bands, are at most
+    * cap / [[MinHashPairDiv]]: exact duplicate clusters collide in every
+    * band, and their pairs — each a candidate entry and possibly an
+    * output row — would otherwise grow the driver heap without bound. */
   private def localMinHashPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, bands: Int, threshold: Double, maxBucketSize: Int,
       cap: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.XXH64
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
-    val in = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    val idField = in.schema("id")
-    val idOk = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
-    if (!idOk(idField.dataType) || in.schema("text").dataType != StringType) return None
+    val (idField, rows) = graft.core.Gate.collectTexts(df, idCol, textCol, cap,
+      nullTexts = false, maxNullIds = 1).getOrElse(return None)
+    val ids = rows.map(_._1)
     val space = UTF8String.fromString(" ")
-    val (ids, sets) = {
-      val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
-        r => graft.core.Gate.textUnits(r.getString(1))).getOrElse(return None)
-      val seen = scala.collection.mutable.HashSet.empty[Any]
-      if (!rows.forall(r => seen.add(r.get(0)))) return None
-      (rows.map(_.get(0)), rows.map { r =>
-        val b = r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val toks = UTF8String.fromBytes(b).split(space, -1)
-        val sh =
-          if (toks.length < n) Array(UTF8String.fromBytes(b))
-          else {
-            val offs = toks.scanLeft(0)((o, t) => o + t.numBytes + 1)
-            Array.tabulate(toks.length - n + 1)(p =>
-              UTF8String.fromBytes(b, offs(p), offs(p + n) - offs(p) - 1))
-          }
-        // sorted by UTF8String.compareTo, so the intersections below merge
-        java.util.Arrays.sort(sh.asInstanceOf[Array[AnyRef]])
-        sh.distinct
-      })
+    val sets = rows.map { case (_, t) =>
+      val toks = t.split(space, -1)
+      val sh =
+        if (toks.length < n) Array(t)
+        else {
+          val offs = toks.scanLeft(0)((o, tok) => o + tok.numBytes + 1)
+          Array.tabulate(toks.length - n + 1)(p => UTF8String.fromAddress(
+            t.getBaseObject, t.getBaseOffset + offs(p), offs(p + n) - offs(p) - 1))
+        }
+      // sorted by UTF8String.compareTo, so the intersections below merge
+      java.util.Arrays.sort(sh.asInstanceOf[Array[AnyRef]])
+      sh.distinct
     }
     val nDocs = ids.length
     // id order as a rank: ids are distinct, a null id takes no pair
     val byId = ids.indices.filter(ids(_) != null).toArray
     val sortedIds =
       if (idField.dataType == StringType)
-        byId.sortWith((a, b) => graft.core.Utf8Order.lt(ids(a).asInstanceOf[String],
-          ids(b).asInstanceOf[String]))
+        byId.sortWith((a, b) => ids(a).asInstanceOf[UTF8String]
+          .compareTo(ids(b).asInstanceOf[UTF8String]) < 0)
       else byId.sortBy(ids(_).asInstanceOf[Number].longValue)
     val rank = Array.fill(nDocs)(-1)
     sortedIds.indices.foreach(i => rank(sortedIds(i)) = i)
@@ -634,34 +636,58 @@ object Dedup extends org.apache.spark.internal.Logging {
         keys(b)(d) = (0 until rowsPerBand).foldLeft(42L)((h, r) =>
           XXH64.hashLong(mh(b * rowsPerBand + r), h))
     }
-    // candidate pairs (lower-id doc << 32 | higher-id doc) from every bucket
-    // within the cap
-    val cands = scala.collection.mutable.HashSet.empty[Long]
-    var nHot = 0L
-    var dropped = 0L
-    for (b <- 0 until bands) {
-      val k = keys(b)
-      val order = Array.range(0, nDocs).sortBy(k(_))
+    // per band, the keys of buckets holding >= 2 docs, sorted, with sizes
+    val multi = keys.map { k =>
+      val sorted = k.clone()
+      java.util.Arrays.sort(sorted)
+      val ks = Array.newBuilder[Long]
+      val sz = Array.newBuilder[Int]
       var i = 0
       while (i < nDocs) {
         var j = i + 1
-        while (j < nDocs && k(order(j)) == k(order(i))) j += 1
-        if (maxBucketSize > 0 && j - i > maxBucketSize) { nHot += 1; dropped += j - i }
-        else for (x <- i until j; y <- x + 1 until j) {
-          val (p, q) = (order(x), order(y))
-          if (rank(p) >= 0 && rank(q) >= 0)
-            cands += (if (rank(p) < rank(q)) p.toLong << 32 | q else q.toLong << 32 | p)
-        }
+        while (j < nDocs && sorted(j) == sorted(i)) j += 1
+        if (j - i >= 2) { ks += sorted(i); sz += j - i }
         i = j
       }
+      (ks.result(), sz.result())
     }
-    if (nHot > 0)
-      logWarning(s"[minHashLshPairs] dropping $nHot hot buckets " +
-        s"(> $maxBucketSize rows each, $dropped bucket rows total) " +
+    def hot(size: Int) = maxBucketSize > 0 && size > maxBucketSize
+    val sizes = multi.flatMap(_._2)
+    val nPairs = sizes.filterNot(hot).map(sz => sz.toLong * (sz - 1) / 2).sum
+    if (nPairs > math.min(cap / MinHashPairDiv, Int.MaxValue - 8L)) return None
+    val hotSizes = sizes.filter(hot)
+    if (hotSizes.nonEmpty)
+      logWarning(s"[minHashLshPairs] dropping ${hotSizes.length} hot buckets " +
+        s"(> $maxBucketSize rows each, ${hotSizes.map(_.toLong).sum} bucket rows total) " +
         "from candidate generation")
-    val out = new java.util.ArrayList[Row]()
-    cands.foreach { c =>
-      val (a, b) = ((c >>> 32).toInt, c.toInt)
+    // candidate pairs (lower-id doc << 32 | higher-id doc) from every kept
+    // bucket, then sorted and made distinct in place
+    val cands = new Array[Long](nPairs.toInt)
+    var nc = 0
+    for (b <- 0 until bands) {
+      val (ks, sz) = multi(b)
+      val kept = ks.indices.filterNot(i => hot(sz(i))).toArray
+      val keptKeys = kept.map(ks)
+      // the kept buckets' docs, grouped by a counting sort over bucket index
+      val start = kept.scanLeft(0)((o, i) => o + sz(i))
+      val fill = start.clone()
+      val members = new Array[Int](start.last)
+      val k = keys(b)
+      for (d <- 0 until nDocs) {
+        val i = java.util.Arrays.binarySearch(keptKeys, k(d))
+        if (i >= 0) { members(fill(i)) = d; fill(i) += 1 }
+      }
+      for (i <- kept.indices; x <- start(i) until start(i + 1); y <- x + 1 until start(i + 1)) {
+        val (p, q) = (members(x), members(y))
+        if (rank(p) >= 0 && rank(q) >= 0) {
+          cands(nc) = if (rank(p) < rank(q)) p.toLong << 32 | q else q.toLong << 32 | p
+          nc += 1
+        }
+      }
+    }
+    java.util.Arrays.sort(cands, 0, nc)
+    val out = Iterator.range(0, nc).filter(c => c == 0 || cands(c) != cands(c - 1)).flatMap { c =>
+      val (a, b) = ((cands(c) >>> 32).toInt, cands(c).toInt)
       val (sa, sb) = (sets(a), sets(b))
       var i = 0
       var j = 0
@@ -673,12 +699,20 @@ object Dedup extends org.apache.spark.internal.Logging {
         if (cmp >= 0) j += 1
       }
       val jaccard = inter.toDouble / (sa.length + sb.length - inter)
-      if (jaccard >= threshold) out.add(Row(ids(a), ids(b), jaccard))
+      if (jaccard >= threshold) Some(InternalRow(ids(a), ids(b), jaccard)) else None
     }
-    Some(df.sparkSession.createDataFrame(out, StructType(Seq(
+    Some(graft.core.Gate.localFrame(df.sparkSession, StructType(Seq(
       idField.copy(name = "id_a"), idField.copy(name = "id_b"),
-      StructField("jaccard", DoubleType, nullable = true)))))
+      StructField("jaccard", DoubleType, nullable = true))), out))
   }
+
+  /** [[minHashLshPairs]]'s local tier enumerates at most cap / this many
+    * candidate pairs (summed over bands, so 250k at the default cap); more
+    * fall through. Every pair may become an output row, the local tier's
+    * main heap cost on duplicate-heavy corpora: in
+    * `graft.tools.TextTierSweep minhash@1-5` (1 GB heap) 171k output rows
+    * raised the heap by ~256 MB and 713k by ~474 MB. */
+  private[graft] val MinHashPairDiv = 10L
 
   /** Deterministic per-seed multipliers for the portable MinHash family,
     * shared verbatim by the Spark expressions and the generated DuckDB

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -131,7 +132,9 @@ object DupSpans {
     *
     * @param maxLocalTokens driver-local tier cap on the token count over
     *   non-null texts, where a text counts at least an eighth of its UTF-8
-    *   bytes (so few-space texts are bounded by size): within it one probe
+    *   bytes (so few-space texts are bounded by size) and at least
+    *   [[graft.core.Gate.RowUnits]] (so short texts are bounded by their
+    *   number): within it one probe
     *   and one collect bring the (id, text) rows to the driver, which
     *   replays the same pipeline — Spark's own `UTF8String.split`, the
     *   same 60-bit md5 lanes, the same containment mask and interval
@@ -299,18 +302,10 @@ object DupSpans {
     * state is primitive arrays. */
   private def localSpans(df: DataFrame, idCol: String, textCol: String,
       resolutions: Seq[(Int, Int)], cap: Long): Option[DataFrame] = {
-    val in = df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    val idField = in.schema("doc_id")
-    val idOk = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
-    if (!idOk(idField.dataType) || in.schema("text").dataType != StringType) return None
-    val (ids, bytes) = {
-      val rows = graft.core.Gate.collectWithin(in.where(col("text").isNotNull), cap)(
-        r => graft.core.Gate.textUnits(r.getString(1))).getOrElse(return None)
-      val seen = scala.collection.mutable.HashSet.empty[Any]
-      if (!rows.forall(r => !r.isNullAt(0) && seen.add(r.get(0)))) return None
-      (rows.map(_.get(0)),
-        rows.map(_.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    }
+    val (idField, rows) = graft.core.Gate.collectTexts(df, idCol, textCol, cap,
+      nullTexts = false, maxNullIds = 0).getOrElse(return None)
+    val ids = rows.map(_._1)
+    val bytes = rows.map(_._2.getBytes)
     val nDocs = ids.length
     val space = UTF8String.fromString(" ")
     // token byte offsets: token k spans [off(k), off(k + 1) - 1) of the text
@@ -367,7 +362,7 @@ object DupSpans {
     for ((n, m) <- resolutions)
       cover(n, m, if (n == n0) dup0 else shared(n, d => dup0(d)._1.filter(p =>
         p + n <= nTok(d) && (p to p + n - n0).forall(masked(d)))))
-    val out = new java.util.ArrayList[Row]()
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     for (d <- 0 until nDocs) {
       var c = 0
       var start = -1
@@ -375,14 +370,14 @@ object DupSpans {
         c += delta(d)(t)
         if (c > 0 && start < 0) start = t
         else if (c == 0 && start >= 0) {
-          out.add(Row(ids(d), start.toLong, (t - start).toLong))
+          out += InternalRow(ids(d), start.toLong, (t - start).toLong)
           start = -1
         }
       }
     }
-    val schema = StructType(Seq(idField,
+    val schema = StructType(Seq(idField.copy(name = "doc_id"),
       StructField("start_pos", LongType, nullable = true),
       StructField("span_tokens", LongType, nullable = true)))
-    Some(df.sparkSession.createDataFrame(out, schema))
+    Some(graft.core.Gate.localFrame(df.sparkSession, schema, out.iterator))
   }
 }

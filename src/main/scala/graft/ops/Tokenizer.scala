@@ -88,9 +88,10 @@ object Tokenizer {
     *
     * @param maxLocalTokens driver-local tier cap on the token count over
     *   the texts, a text counting at least an eighth of its UTF-8 bytes
-    *   ([[graft.core.Gate.textUnits]]) and a null text one: within it one
-    *   probe and one collect bring the (id, text) rows to the driver,
-    *   which lowercases each text through Spark's own `lower`
+    *   ([[graft.core.Gate.textUnits]]) and any row, a null text's too, at
+    *   least [[graft.core.Gate.RowUnits]]: within it one probe and one
+    *   collect bring the (id, text) rows to the driver, which lowercases
+    *   each text's stored bytes through Spark's own `lower`
     *   (`CollationSupport.Lower`, honouring
     *   `spark.sql.icu.caseMappings.enabled`), extracts `[a-z0-9]+` words
     *   as `regexp_extract_all` does, tokenizes each distinct word once with
@@ -101,9 +102,11 @@ object Tokenizer {
     *   that are neither integral nor string, a text column that is not a
     *   string, and anything over the cap fall through to the distributed
     *   tier; 0 forces it. The default is measured
-    *   (`graft.tools.TextTierSweep tokenstats`, 4 cores, 60-token docs, 1 GB
-    *   heap): at 10M tokens the local tier took 6.3 s against 19.6 s
-    *   distributed and raised the heap by at most ~330 MB.
+    *   (`graft.tools.TextTierSweep tokenstats`, 4 cores, 1 GB heap): at
+    *   10M tokens of 60-token docs (166,667 rows, the most the row floor
+    *   admits) the local tier took 4.1 s against 19.6 s distributed and
+    *   raised the heap by at most ~360 MB; 166k docs of 1–5 tokens took
+    *   1.5–1.8 s against 4.1 s at ~290–330 MB.
     */
   def tokenStats(docs: DataFrame, idCol: String, textCol: String,
       vocab: Seq[String] = defaultVocab,
@@ -146,22 +149,18 @@ object Tokenizer {
 
   /** [[tokenStats]]'s driver-local tier, or None when it must not run: one
     * probe of the size, then — only within the cap — one collect of every
-    * (id, text) row. */
+    * (id, text) row, as [[graft.core.Gate.collectTexts]] gives them (the
+    * texts' stored bytes, a row counting at least [[graft.core.Gate.RowUnits]]). */
   private def localTokenStats(docs: DataFrame, idCol: String, textCol: String,
       vocab: Seq[String], cap: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
     import org.apache.spark.sql.internal.SQLConf
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
-    val in = docs.select(col(idCol), col(textCol))
-    val idField = in.schema.head
-    val idOk = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
-    if (!idOk(idField.dataType) || in.schema(1).dataType != StringType) return None
-    val rows = graft.core.Gate.collectWithin(in, cap)(r =>
-      if (r.isNullAt(1)) 1L else graft.core.Gate.textUnits(r.getString(1))).getOrElse(return None)
-    val seen = scala.collection.mutable.HashSet.empty[Any]
-    if (!rows.forall(r => r.isNullAt(0) || seen.add(r.get(0)))) return None
+    val (idField, rows) = graft.core.Gate.collectTexts(docs, idCol, textCol, cap,
+      nullTexts = true, maxNullIds = Int.MaxValue)
+      .getOrElse(return None)
     val maxLen = vocab.map(_.length).max
     val vs = vocab.toSet
     val icu = {
@@ -169,33 +168,35 @@ object Tokenizer {
       docs.sparkSession.conf.get(e.key, e.defaultValueString).toBoolean
     }
     val word = java.util.regex.Pattern.compile("[a-z0-9]+")
+    val empty = UTF8String.fromString("")
     // distinct word -> (its tokens, how many are "?")
     val memo = scala.collection.mutable.HashMap.empty[String, (Seq[String], Long)]
-    val out = rows.map { r =>
-      if (r.isNullAt(0) || r.isNullAt(1)) Row(r.get(0), 0L, 0L, "")
+    val out = rows.iterator.map { case (id, t) =>
+      if (id == null || t == null) InternalRow(id, 0L, 0L, empty)
       else {
-        val m = word.matcher(CollationSupport.Lower.exec(UTF8String.fromString(r.getString(1)),
+        // regexp_extract_all matches on the lowered text's String form
+        val m = word.matcher(CollationSupport.Lower.exec(t,
           CollationFactory.UTF8_BINARY_COLLATION_ID, icu).toString)
         var nTok = 0L
         var nUnk = 0L
         val head = scala.collection.mutable.ArrayBuffer.empty[String]
         while (m.find()) {
           val (toks, unk) = memo.getOrElseUpdate(m.group(), {
-            val t = tokenizeWord(m.group(), vs, maxLen)
-            (t, t.count(_ == "?").toLong)
+            val ws = tokenizeWord(m.group(), vs, maxLen)
+            (ws, ws.count(_ == "?").toLong)
           })
           nTok += toks.size
           nUnk += unk
           if (head.length < 8) head ++= toks
         }
-        Row(r.get(0), nTok, nUnk, head.take(8).mkString(" "))
+        InternalRow(id, nTok, nUnk, UTF8String.fromString(head.take(8).mkString(" ")))
       }
     }
-    Some(docs.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+    Some(graft.core.Gate.localFrame(docs.sparkSession, StructType(Seq(
       idField,
       StructField("n_tokens", LongType, nullable = false),
       StructField("n_unk", LongType, nullable = false),
-      StructField("head_toks", StringType, nullable = false)))))
+      StructField("head_toks", StringType, nullable = false))), out))
   }
 
   /** Corpus-wide token frequencies: (tok, n_occurrences) — multiplicity

@@ -25,13 +25,21 @@ import scala.jdk.CollectionConverters._
   *     earlier document with 3 of its tokens replaced; n = 3, 64 hashes,
   *     16 bands, threshold 0.5 (the benchmark's settings).
   *   - tokenstats: the spans documents; the default vocabulary.
+  *   - spans@A-B, minhash@A-B, tokenstats@A-B (or @L): the same operators
+  *     on documents of A to B tokens (uniform; exactly L) over the same
+  *     vocabulary, nothing planted. Short documents are the shape where
+  *     the per-document state, not the tokens, fills the heap, and they
+  *     repeat exactly, so minhash meets large duplicate clusters.
   *
   * Inputs are cached in 4 partitions before timing; each call's outputs
   * are consumed by a hash sum over every column. Usage:
-  *   SPARK_DRIVER_MEM=2g sbt "runMain graft.tools.TextTierSweep bpe|spans|minhash|tokenstats [local|distributed] SIZE..."
-  * (both tiers unless one is named).
+  *   SPARK_DRIVER_MEM=2g sbt "runMain graft.tools.TextTierSweep OP [local|distributed|gate=N]... SIZE..."
+  * where `local` is the gate at Long.MaxValue, `distributed` at 0 and
+  * `gate=N` at N (both forced tiers unless a tier is named).
   * Prints one JSON line per (op, size, tier): the faster of two calls'
-  * seconds, the larger of their heap figures, and the output digest.
+  * seconds, the larger of their heap figures, the output digest, the
+  * tier that ran (a gate may fall through) and the output's row count
+  * (the last consumed output's, for bpe its segmentation).
   */
 object TextTierSweep {
 
@@ -57,8 +65,14 @@ object TextTierSweep {
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
   }
 
-  private def consume(df: DataFrame): Long =
-    df.selectExpr("coalesce(sum(hash(*)), 0)").collect()(0).getLong(0)
+  private val outRows = new AtomicLong(0L)
+
+  // the hash sum over every column; the row count adds to outRows
+  private def consume(df: DataFrame): Long = {
+    val r = df.selectExpr("count(1)", "coalesce(sum(hash(*)), 0)").collect()(0)
+    outRows.set(r.getLong(0))
+    r.getLong(1)
+  }
 
   def bpeWords(spark: SparkSession, size: Long): DataFrame = {
     import spark.implicits._
@@ -72,7 +86,8 @@ object TextTierSweep {
     seen.toSeq.toDF("w", "n_w")
   }
 
-  def spanDocs(spark: SparkSession, size: Long, nearCopies: Boolean = false): DataFrame = {
+  def spanDocs(spark: SparkSession, size: Long, nearCopies: Boolean = false,
+      lens: Option[(Int, Int)] = None): DataFrame = {
     import spark.implicits._
     val rnd = new java.util.SplittableRandom(7)
     // Zipf(1) over 5000 words by inverse CDF
@@ -84,8 +99,8 @@ object TextTierSweep {
     val docs = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
     var tokens = 0L
     while (tokens < size) {
-      val d = Array.fill(60)(word())
-      if (docs.size % 5 == 4) {
+      val d = Array.fill(lens.fold(60) { case (a, b) => a + rnd.nextInt(b - a + 1) })(word())
+      if (lens.isEmpty && docs.size % 5 == 4) {
         val src = docs(rnd.nextInt(docs.size))
         if (nearCopies) {
           System.arraycopy(src, 0, d, 0, 60)
@@ -93,15 +108,19 @@ object TextTierSweep {
         } else System.arraycopy(src, rnd.nextInt(40), d, rnd.nextInt(40), 20)
       }
       docs += d
-      tokens += 60
+      tokens += d.length
     }
     docs.zipWithIndex.map { case (d, i) => (i.toLong, d.mkString(" ")) }.toSeq.toDF("doc_id", "text")
   }
 
   def main(args: Array[String]): Unit = {
-    val op = args.head
-    val only = args.tail.filter(a => a == "local" || a == "distributed").toSet
-    val sizes = args.tail.filterNot(only).map(_.toLong)
+    val op = args.head.takeWhile(_ != '@')
+    val lens = args.head.split('@').drop(1).headOption.map { r =>
+      val Array(a, b) = if (r.contains('-')) r.split('-') else Array(r, r)
+      (a.toInt, b.toInt)
+    }
+    val (tierArgs, sizeArgs) = args.tail.partition(a => a.head.isLetter)
+    val sizes = sizeArgs.map(_.toLong)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -110,27 +129,35 @@ object TextTierSweep {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     watchGc()
-    def call(input: DataFrame, gate: Long): Long = op match {
+    def ranLocal(df: DataFrame) = df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    // (output digest, whether the local tier ran)
+    def call(input: DataFrame, gate: Long): (Long, Boolean) = op match {
       case "bpe" =>
         val (merges, segs) = graft.ops.BpeTrain.train(input, 3, maxLocalSymbols = gate)
-        consume(merges) + consume(segs)
-      case "spans" =>
-        consume(graft.ops.DupSpans.dupSpansMulti(input, "doc_id", "text",
-          maxLocalTokens = gate))
-      case "minhash" =>
-        consume(graft.ops.Dedup.minHashLshPairs(input, "doc_id", "text", 3, 64, 16, 0.5,
-          maxLocalTokens = gate))
-      case "tokenstats" =>
-        consume(graft.ops.Tokenizer.tokenStats(input, "doc_id", "text",
-          maxLocalTokens = gate))
+        (consume(merges) + consume(segs), ranLocal(segs))
+      case other =>
+        val out = other match {
+          case "spans" =>
+            graft.ops.DupSpans.dupSpansMulti(input, "doc_id", "text", maxLocalTokens = gate)
+          case "minhash" =>
+            graft.ops.Dedup.minHashLshPairs(input, "doc_id", "text", 3, 64, 16, 0.5,
+              maxLocalTokens = gate)
+          case "tokenstats" =>
+            graft.ops.Tokenizer.tokenStats(input, "doc_id", "text", maxLocalTokens = gate)
+        }
+        (consume(out), ranLocal(out))
     }
     def gen(size: Long) = (op match {
       case "bpe" => bpeWords(spark, size)
-      case _ => spanDocs(spark, size, nearCopies = op == "minhash")
+      case _ => spanDocs(spark, size, nearCopies = op == "minhash", lens = lens)
     })
       .repartition(4).persist(StorageLevel.MEMORY_AND_DISK)
-    val tiers = Seq("local" -> Long.MaxValue, "distributed" -> 0L)
-      .filter { case (t, _) => only.isEmpty || only(t) }
+    val tiers = (if (tierArgs.isEmpty) Seq("local", "distributed") else tierArgs.toSeq).map {
+      case "local" => "local" -> Long.MaxValue
+      case "distributed" => "distributed" -> 0L
+      case g => g -> g.stripPrefix("gate=").toLong
+    }
     // warm the tiers' code paths on a small input
     val warm = gen(sizes.min min 20000L)
     warm.count()
@@ -144,14 +171,16 @@ object TextTierSweep {
           val base = heapUsed()
           peakAfterGc.set(0L)
           val t0 = System.nanoTime()
-          val digest = call(input, gate)
+          val (digest, local) = call(input, gate)
           val sec = (System.nanoTime() - t0) / 1e9
-          (sec, math.max(0L, peakAfterGc.get - base), digest)
+          (sec, math.max(0L, peakAfterGc.get - base), digest, local)
         }
-        val (sec, _, digest) = runs.minBy(_._1)
+        val (sec, _, digest, local) = runs.minBy(_._1)
         val heap = runs.map(_._2).max
-        println(f"""{"op":"$op","size":$size,"rows":$rows,"tier":"$tier",""" +
-          f""""sec":$sec%.3f,"heap_mb":${heap / 1048576.0}%.1f,"digest":$digest}""")
+        val ran = if (local) "local" else "distributed"
+        println(f"""{"op":"${args.head}","size":$size,"rows":$rows,"tier":"$tier",""" +
+          f""""sec":$sec%.3f,"heap_mb":${heap / 1048576.0}%.1f,"digest":$digest,""" +
+          f""""ran":"$ran","out_rows":${outRows.get}}""")
       }
       input.unpersist()
     }

@@ -173,9 +173,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     * schemas, and which tier the default gate chose — and returns the rows
     * as (id_a as string, id_b as string, jaccard). */
   private def mhTiers(df: DataFrame, threshold: Double, local: Boolean = true,
-      maxBucketSize: Int = 1000): Seq[(String, String, Double)] = {
+      maxBucketSize: Int = 1000, cap: Long = 2_500_000L): Seq[(String, String, Double)] = {
     val got = Dedup.minHashLshPairs(df, "doc_id", "text", 3, 64, 16, threshold,
-      maxBucketSize)
+      maxBucketSize, maxLocalTokens = cap)
     val dist = Dedup.minHashLshPairs(df, "doc_id", "text", 3, 64, 16, threshold,
       maxBucketSize, maxLocalTokens = 0)
     def rows(d: DataFrame) = d.collect().map(r =>
@@ -238,6 +238,36 @@ class DedupSimilaritySpec extends AnyFunSuite {
       0.5, local = false)
     mhTiers(Seq((1.5, "a b c d"), (2.5, "a b c d")).toDF("doc_id", "text"), 0.5,
       local = false)
+    // two null ids: the distributed groupBy(id) merges their shingles
+    mhTiers(Seq((Some(1L), "a b c d"), (None, "a b c d"), (None, "a b c e"))
+      .toDF("doc_id", "text"), 0.5, local = false)
+  }
+
+  test("minHashLshPairs: an exact-duplicate cluster over the pair bound is distributed") {
+    // 12 copies collide in all 16 bands: 16 · C(12, 2) = 1056 candidate
+    // pairs; the 13 texts count 13 · RowUnits units
+    val df = (Seq.tabulate(12)(i => (i.toLong, "same words in every copy")) ++
+      Seq((20L, "other words here entirely"))).toDF("doc_id", "text")
+    val pairs = 16L * 66
+    assert(13 * graft.core.Gate.RowUnits < pairs * Dedup.MinHashPairDiv)
+    mhTiers(df, 0.8, local = false, cap = pairs * Dedup.MinHashPairDiv - 1)
+    assert(mhTiers(df, 0.8, cap = pairs * Dedup.MinHashPairDiv).size == 66)
+  }
+
+  test("minHashLshPairs tiers agree on texts and ids that are not valid UTF-8") {
+    // 2 and 3 differ only in an invalid byte that decoding would replace
+    // with U+FFFD; so do the string ids 4 and 5
+    val df = Seq(("31", "6120627a"), ("32", "7820ff"), ("33", "7820fe"),
+        ("61ff", "61206220632064"), ("61fe", "61206220632064"))
+      .toDF("h_id", "h_text")
+      .select(expr("cast(unhex(h_id) as string)").as("doc_id"),
+        expr("cast(unhex(h_text) as string)").as("text"))
+    assert(mhTiers(df, 0.5).size == 1)
+    def hexIds(d: DataFrame) = d.select(hex(col("id_a")), hex(col("id_b")))
+      .collect().map(_.toSeq).toSeq
+    assert(hexIds(Dedup.minHashLshPairs(df, "doc_id", "text", threshold = 0.5)) ==
+      hexIds(Dedup.minHashLshPairs(df, "doc_id", "text", threshold = 0.5,
+        maxLocalTokens = 0)))
   }
 
   test("portable (md5-derived) minhash variant keeps full recall too") {

@@ -191,11 +191,13 @@ class DupSpansSpec extends AnyFunSuite {
   }
 
   test("a long text with few spaces is bounded by its bytes, not its tokens") {
-    // 4 tokens but 1606 UTF-8 bytes: 201 units, over a cap of 100
+    // 4 tokens but 1606 UTF-8 bytes: 201 units, over a cap of 100; the
+    // two short texts count Gate.RowUnits each
     val long = "é" * 800 + " a b c"
-    assert(graft.core.Gate.textUnits(long) == 201L)
+    assert(graft.core.Gate.textUnits(
+      org.apache.spark.unsafe.types.UTF8String.fromString(long)) == 201L)
     val df = Seq((1L, long), (2L, "x a b c"), (3L, "a b c")).toDF("doc_id", "text")
     tiers(df, Seq((2, 2)), local = false, cap = 100)
-    tiers(df, Seq((2, 2)), cap = 250)
+    tiers(df, Seq((2, 2)), cap = 201 + 2 * graft.core.Gate.RowUnits)
   }
 }

@@ -53,8 +53,8 @@ class TokenizerSpec extends AnyFunSuite {
     * which tier the default gate chose — and returns the rows as
     * (id as string, n_tokens, n_unk, head_toks). */
   private def tiers(docs: DataFrame, vocab: Seq[String] = Tokenizer.defaultVocab,
-      local: Boolean = true): Seq[(String, Long, Long, String)] = {
-    val got = Tokenizer.tokenStats(docs, "doc_id", "text", vocab)
+      local: Boolean = true, cap: Long = 10_000_000L): Seq[(String, Long, Long, String)] = {
+    val got = Tokenizer.tokenStats(docs, "doc_id", "text", vocab, maxLocalTokens = cap)
     val dist = Tokenizer.tokenStats(docs, "doc_id", "text", vocab, maxLocalTokens = 0)
     def rows(d: DataFrame) = d.collect().map(r =>
       (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
@@ -96,6 +96,23 @@ class TokenizerSpec extends AnyFunSuite {
     tiers(Seq((1L, "the batch"), (1L, "table"), (2L, "x")).toDF("doc_id", "text"),
       local = false)
     tiers(Seq((1.5, "the batch"), (2.5, "table")).toDF("doc_id", "text"), local = false)
+  }
+
+  test("tokenStats: short and null texts count Gate.RowUnits each toward the gate") {
+    val docs = (Seq.tabulate(9)(i => (i.toLong, "xq")) :+ (9L, null)).toDF("doc_id", "text")
+    tiers(docs, local = false, cap = 10 * graft.core.Gate.RowUnits - 1)
+    tiers(docs, cap = 10 * graft.core.Gate.RowUnits)
+  }
+
+  test("tokenStats tiers agree on texts and ids that are not valid UTF-8") {
+    val docs = Seq(("61ff", "41ff42c3"), ("61fe", "41fe42"), ("62", "ff"))
+      .toDF("h_id", "h_text")
+      .selectExpr("cast(unhex(h_id) as string) as doc_id",
+        "cast(unhex(h_text) as string) as text")
+    assert(tiers(docs).size == 3)
+    def hexIds(d: DataFrame) = d.selectExpr("hex(doc_id)").collect().map(_.getString(0)).sorted
+    assert(hexIds(Tokenizer.tokenStats(docs, "doc_id", "text")) ===
+      hexIds(Tokenizer.tokenStats(docs, "doc_id", "text", maxLocalTokens = 0)))
   }
 
   test("tokenFrequencies: multiplicity-weighted corpus counts") {
