@@ -282,7 +282,7 @@ private[graft] object GraphQueries {
       // co-occurring in an order are linked; low-quantity lineitems only
       // and orders capped at 8 items so clique blowup is bounded — same
       // guardrail as association mining; MEASURED on the unguarded graph
-      // by tools/TriFullBench: 1.20M edges, 5.65M participations, 21.1 s
+      // once (one-off timing): 1.20M edges, 5.65M participations, 21.1 s
       // at sf0.1/local[32] — feasible, just no extra oracle coverage).
       // Degree-ordered orientation emits each triangle once
       graft.ops.Triangles.perNodeCounts(Tables.coOrderPairEdges(s, d),

@@ -322,9 +322,9 @@ private[graft] object TextQueries {
       val segs = graft.ops.BpeTrain.train(
         graft.ops.BpeTrain.corpusWords(docs, "text"), rounds = 3)._2
       val cap = 1 << 20
-      val vocab = segs.select(col("sym")).distinct().limit(cap + 1)
-        .collect().map(_.getString(0)).toSeq
-      require(vocab.size <= cap, s"trained vocab exceeds $cap symbols")
+      val vocab = graft.core.Gate.collectAtMost(segs.select(col("sym")).distinct(), cap)
+        .getOrElse(throw new IllegalArgumentException(s"trained vocab exceeds $cap symbols"))
+        .map(_.getString(0)).toSeq
       Tokenizer.tokenStats(docs, "doc_id", "text", vocab.sorted)
         .orderBy("doc_id")
     },

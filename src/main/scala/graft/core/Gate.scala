@@ -2,7 +2,7 @@ package graft.core
 
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -11,28 +11,56 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Size gate of a driver-local tier. */
+/** Size gate of a driver-local tier, and the one statement of its rule.
+  *
+  * An operator with a driver-local tier takes a cap (`maxLocalEdges`,
+  * `maxLocalTokens`, ...) and asks [[collectAtMost]] (a row cap) or
+  * [[collectWithin]] (a cap on a summed size) for its input:
+  *
+  *   - a cap ≤ 0 forces the distributed tier: None, and no Spark job runs;
+  *   - an input over the cap falls through to the distributed tier (None);
+  *   - within the cap the operator gets its rows and runs locally.
+  *
+  * [[collectAtMost]] probes with one `limit(cap + 1)` collect, so over the
+  * cap the driver holds at most `cap + 1` rows before it drops them: the
+  * bound the local tier already accepts for a capped input, paid without
+  * a separate `count()` job. A cap ≥ `Int.MaxValue - 1`, where `cap + 1`
+  * reaches the largest Int limit, means no row limit: a plain collect.
+  * An operator with no distributed tier (a "loud" gate) throws on None,
+  * so at a cap ≤ 0 it always throws. */
 object Gate {
+
+  /** `ds`'s rows when there are at most `cap`, else None; see [[Gate]]. */
+  def collectAtMost[T](ds: Dataset[T], cap: Long): Option[Array[T]] =
+    if (cap <= 0) None
+    else {
+      val got = if (cap < Int.MaxValue - 1) ds.limit(cap.toInt + 1).collect() else ds.collect()
+      if (got.length > cap) None else Some(got)
+    }
 
   /** `df`'s rows when Σ size(row) ≤ cap, else None: see the RDD variant. */
   def collectWithin(df: DataFrame, cap: Long)(size: Row => Long): Option[Array[Row]] =
     collectWithin(df.rdd, cap)(size)
 
-  /** `rdd`'s elements when Σ size(x) ≤ cap, else None: one probe job, then
-    * — only within the cap — one collect. Both run over the same RDD, so
-    * the shuffles upstream of it materialize once and the collect re-reads
-    * their output. Over the cap nothing reaches the driver but the sum,
-    * and each probe task stops reading once its own partition is over the
-    * cap; the caller's distributed tier then evaluates its input again, so
-    * an over-cap call pays one extra pass (a partial one when partitions
+  /** `rdd`'s elements when Σ size(x) ≤ cap, else None. At cap ≤ 0 `rdd` is
+    * not even built (building a plan's RDD under AQE runs its shuffle
+    * stages), so no job runs. Else one probe job, then — only within the
+    * cap — one collect. Both run over the same RDD, so the shuffles
+    * upstream of it materialize once and the collect re-reads their
+    * output. Over the cap nothing reaches the driver but the sum, and each
+    * probe task stops reading once its own partition is over the cap; the
+    * caller's distributed tier then evaluates its input again, so an
+    * over-cap call pays one extra pass (a partial one when partitions
     * exceed the cap). */
-  def collectWithin[T: ClassTag](rdd: RDD[T], cap: Long)(size: T => Long): Option[Array[T]] = {
-    val total = rdd.mapPartitions { it =>
+  def collectWithin[T: ClassTag](rdd: => RDD[T], cap: Long)(size: T => Long): Option[Array[T]] = {
+    if (cap <= 0) return None
+    val in = rdd
+    val total = in.mapPartitions { it =>
       var s = 0L
       while (s <= cap && it.hasNext) s += size(it.next())
       Iterator.single(s)
     }.fold(0L)(_ + _)
-    if (total > cap) None else Some(rdd.collect())
+    if (total > cap) None else Some(in.collect())
   }
 
   /** A text's size under a text gate: its token count (one more than its
@@ -79,13 +107,12 @@ object Gate {
         in0.schema("text").dataType != StringType) return None
     val in = if (nullTexts) in0 else in0.where(col("text").isNotNull)
     // internal rows are reused by their iterator: copy what is kept
-    val rows = in.queryExecution.toRdd.map { r =>
+    val got = collectWithin(in.queryExecution.toRdd.map { r =>
       val id = if (r.isNullAt(0)) null
         else if (idType == StringType) r.getUTF8String(0).clone()
         else r.get(0, idType)
       (id: Any, if (r.isNullAt(1)) null else r.getUTF8String(1).clone())
-    }
-    val got = collectWithin(rows, cap) { case (_, t) =>
+    }, cap) { case (_, t) =>
       if (t == null) RowUnits else math.max(RowUnits, textUnits(t))
     }.getOrElse(return None)
     val seen = scala.collection.mutable.HashSet.empty[Any]

@@ -37,7 +37,7 @@ object HexToLongImpl {
   * Built-in `conv(s, 16, 10)` computes the same value but routes every row
   * through arbitrary-base string conversion and returns a STRING that then
   * needs a cast — measured ~8× the cost of the md5 itself at sf0.1
-  * (tools/CmsBench: 0.24 s md5 vs 2.0 s conv per 600k rows). This is one
+  * (0.24 s md5 vs 2.0 s conv per 600k rows, measured once). This is one
   * shift-or loop over the UTF8String bytes inside whole-stage codegen.
   * Capped at 15 chars (60 bits) so the result is always a non-negative
   * long — identical to `('0x' || s)::BIGINT` in DuckDB for those widths.

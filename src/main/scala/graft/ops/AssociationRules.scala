@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Ingest, Utf8Order}
+import graft.core.{Gate, Ingest, Utf8Order}
 import graft.functions.TopKStrBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -127,11 +127,10 @@ object AssociationRules {
     // no row index; over the cap, fall through to the distributed plan.
     val rowCap = math.min(LocalPairVolume, params.eagerMaterializePairVolume) /
       math.max(1L, params.maxItemsetSize.toLong - 1L)
-    if (rowCap > 0) {
-      val capped = projected.where(nonNull)
-        .limit(rowCap.toInt + 1).as[(Long, String, Double)].collect()
-      if (capped.length <= rowCap)
+    Gate.collectAtMost(projected.where(nonNull).as[(Long, String, Double)], rowCap) match {
+      case Some(capped) =>
         return localRules(spark, capped, projected.schema("item").nullable, params)
+      case None => // over the cap: distributed tier
     }
 
     val ordered =
@@ -141,7 +140,7 @@ object AssociationRules {
       .where(nonNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // count-probe (the louvainHier gate discipline) on the RAW input,
+      // count-probe on the RAW input (it sizes a gate, nothing is collected),
       // not the cached projection: a bare count() over the source scans
       // zero columns (parquet row-group counts), ~free, while counting
       // `rows` would pay a full cache-write pass the lazy small-scale
@@ -303,18 +302,17 @@ object AssociationRules {
     val items: Array[String] = validItems
       .select($"item", $"first_rid").orderBy($"first_rid", $"item")
       .select($"item").as[String].collect()
-    val pairs = kept.select($"antecedent", $"consequent").distinct()
-    // the +1 probe would overflow at Int.MaxValue (Spark rejects the
-    // negative limit); no collect can exceed that cap anyway
-    val probe =
-      if (maxPatternEdges < Int.MaxValue - 1) pairs.limit(maxPatternEdges + 1) else pairs
-    val edges = probe.as[(String, String)].collect()
-    requirePatternEdges(edges.length, maxPatternEdges)
-    dfsPatterns(items, edges).toSeq.toDF("item", "pattern")
+    val edges = Gate.collectAtMost(
+      kept.select($"antecedent", $"consequent").distinct().as[(String, String)],
+      maxPatternEdges)
+    requirePatternEdges(edges.isDefined, maxPatternEdges)
+    dfsPatterns(items, edges.get).toSeq.toDF("item", "pattern")
   }
 
-  private def requirePatternEdges(distinctPairs: Int, maxPatternEdges: Int): Unit =
-    require(distinctPairs <= maxPatternEdges,
+  /** Both tiers' loud gate. `within`: the cap is ≥ 1 and there are at
+    * most `maxPatternEdges` distinct kept pairs (see [[Gate]]). */
+  private def requirePatternEdges(within: Boolean, maxPatternEdges: Int): Unit =
+    require(within,
       s"association pattern graph exceeds maxPatternEdges=$maxPatternEdges " +
         "distinct kept pairs; raise Params.maxPatternEdges (driver memory " +
         "permitting), raise minSupport/minConfidence, or use the symmetric " +
@@ -450,7 +448,8 @@ object AssociationRules {
           it -> number.getOrElseUpdate(label.getOrElse(it, it), number.size + 1)
         }.toMap
       } else {
-        requirePatternEdges(edges.size, params.maxPatternEdges)
+        requirePatternEdges(params.maxPatternEdges > 0 &&
+          edges.size <= params.maxPatternEdges, params.maxPatternEdges)
         dfsPatterns(ordered.map(names), keptPairs).toMap
       }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Ingest, LocalGraph}
+import graft.core.{Gate, Ingest, LocalGraph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,15 +39,13 @@ object Betweenness {
     import spark.implicits._
 
     val e = Ingest.edges(df, from, to)
-    // cheap COUNT probe before any collect; above the broadcast gate we
-    // fall through to the fully distributed level-synchronous Brandes
-    // (exact, sampleSize=0) instead of failing — the PageRank.scores
-    // capped-probe pattern (VERDICT r7 item 2), spec-pinned equal output
+    // one capped collect; above the broadcast gate we fall through to the
+    // fully distributed level-synchronous Brandes (exact, sampleSize=0)
+    // instead of failing (VERDICT r7 item 2), spec-pinned equal output
     // with the gate forced to 0.
-    val nEdges = e.count()
-    if (nEdges > maxLocalEdges)
-      return betweennessCentralityDistributed(df, from, to, normalized, directed)
-    val rows = e.as[(String, String)].collect().map { case (f, t) => (f, t, 1L) }
+    val rows = Gate.collectAtMost(e.as[(String, String)], maxLocalEdges)
+      .getOrElse(return betweennessCentralityDistributed(df, from, to, normalized, directed))
+      .map { case (f, t) => (f, t, 1L) }
     val graph = LocalGraph.fromEdges(rows.toSeq, directed)
     val n = graph.numNodes
     if (n == 0) return spark.emptyDataset[(String, Double)].toDF("node", "centrality")
@@ -90,11 +88,11 @@ object Betweenness {
     val spark = df.sparkSession
     import spark.implicits._
     val e = Ingest.edges(df, from, to)
-    // guard BEFORE collecting — counting first is the whole point of the cap
-    val nEdges = e.count()
-    require(nEdges <= maxLocalEdges,
-      s"betweenness broadcast fast path supports <= $maxLocalEdges edges (got $nEdges)")
-    val rows = e.as[(String, String)].collect().map { case (f, t) => (f, t, 1L) }
+    // a loud gate: no distributed sampled form
+    val rows = Gate.collectAtMost(e.as[(String, String)], maxLocalEdges)
+      .getOrElse(throw new IllegalArgumentException(
+        s"betweenness broadcast fast path supports <= $maxLocalEdges edges"))
+      .map { case (f, t) => (f, t, 1L) }
     val graph = LocalGraph.fromEdges(rows.toSeq, directed)
     val n = graph.numNodes
     if (n == 0) return spark.emptyDataset[(String, Double)].toDF("node", "centrality")
@@ -301,13 +299,12 @@ object Betweenness {
     val spark = df.sparkSession
     import spark.implicits._
     val e = Ingest.edges(df, from, to)
-    // cheap COUNT probe; above the broadcast gate fall through to the
+    // one capped collect; above the broadcast gate fall through to the
     // fully distributed level-synchronous form (VERDICT r7 item 2 — the
     // last hard require on an oracle-feeding path), spec-pinned equal
-    val nEdges = e.count()
-    if (nEdges > maxLocalEdges)
-      return allPairsSigmaDistributed(df, from, to, directed)
-    val rows = e.as[(String, String)].collect().map { case (f, t) => (f, t, 1L) }
+    val rows = Gate.collectAtMost(e.as[(String, String)], maxLocalEdges)
+      .getOrElse(return allPairsSigmaDistributed(df, from, to, directed))
+      .map { case (f, t) => (f, t, 1L) }
     val graph = LocalGraph.fromEdges(rows.toSeq, directed)
     val n = graph.numNodes
     if (n == 0) return spark.emptyDataset[(String, String, Int, Long)]

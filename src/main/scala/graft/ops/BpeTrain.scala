@@ -63,7 +63,7 @@ object BpeTrain {
     val spark = words.sparkSession
     import spark.implicits._
     val wn = words.select($"w", $"n_w")
-    if (maxLocalSymbols > 0) collectWords(wn, maxLocalSymbols) match {
+    collectWords(wn, maxLocalSymbols) match {
       case Some(ws) => return localTrain(spark, ws, rounds, wn.schema("w").nullable)
       case None => // over the cap or a contract edge: distributed tier
     }

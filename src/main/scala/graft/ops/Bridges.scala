@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -56,15 +57,13 @@ object Bridges {
           .as("y"))
       .where(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .distinct()
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = canonical.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(canonical.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("src", "dst")
         return spark.createDataFrame(localBridges(capped).toIndexedSeq)
           .toDF("src", "dst").orderBy("src", "dst")
-      }
+      case None => // over the cap: distributed tier
     }
     distributedBridges(spark, canonical, maxBfsRounds)
   }
@@ -119,14 +118,12 @@ object Bridges {
           .as("y"))
       .where(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .distinct()
-    val capped = canonical.limit(
-      math.min(maxLocalEdges, Int.MaxValue - 2L).toInt + 1)
-      .as[(String, String)].collect()
-    require(capped.length <= maxLocalEdges,
-      s"articulationPoints: graph exceeds maxLocalEdges=$maxLocalEdges — " +
-        "vertex biconnectivity needs an Euler-tour list-ranking build " +
-        "this engine does not provide; raise the cap only with driver " +
-        "memory to match")
+    val capped = Gate.collectAtMost(canonical.as[(String, String)], maxLocalEdges)
+      .getOrElse(throw new IllegalArgumentException(
+        s"articulationPoints: graph exceeds maxLocalEdges=$maxLocalEdges — " +
+          "vertex biconnectivity needs an Euler-tour list-ranking build " +
+          "this engine does not provide; raise the cap only with driver " +
+          "memory to match"))
     if (capped.isEmpty)
       return spark.emptyDataset[String].toDF("node")
     spark.createDataFrame(localArticulation(capped).map(Tuple1(_))

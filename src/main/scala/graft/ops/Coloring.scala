@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -49,17 +50,15 @@ object Coloring {
           .as("y"))
       .where(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .distinct()
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = canonical.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(canonical.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, Long, Long)]
             .toDF("node", "color", "round")
         return spark.createDataFrame(
             localColoring(capped, rounds, salt).toIndexedSeq)
           .toDF("node", "color", "round").orderBy("node")
-      }
+      case None => // over the cap: distributed tier
     }
     distributedColoring(spark, canonical, rounds, salt)
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,16 +52,13 @@ object Communities {
     // in-memory replay of the IDENTICAL rounds (same majority rule, same
     // min-label tie-break in UTF8-byte order) is an order of magnitude
     // faster. Above the cap: the shuffle loop below, unchanged.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(symRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
         return spark.createDataFrame(localLpa(capped, rounds).toIndexedSeq)
           .toDF("node", "community")
-      }
-      // over the cap: fall through to the distributed loop
+      case None => // over the cap: fall through to the distributed loop
     }
 
     val sym = symRaw
@@ -107,15 +105,13 @@ object Communities {
     val symRaw = canon.select($"x".as("a"), $"y".as("b"), $"w")
       .union(canon.select($"y".as("a"), $"x".as("b"), $"w"))
 
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(symRaw.as[(String, String, Long)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
         return spark.createDataFrame(localLpaWeighted(capped, rounds).toIndexedSeq)
           .toDF("node", "community")
-      }
+      case None => // over the cap: distributed tier
     }
 
     val sym = symRaw.localCheckpoint(true)
@@ -301,18 +297,15 @@ object Communities {
     // tie-break in UTF8-byte order) wins by an order of magnitude. The
     // label table is at most one row per vertex, so it is collected only
     // after the edge list passes the gate.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = eRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(eRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
         val labArr = labels.select(col("node").cast("string"),
           col("community").cast("string")).as[(String, String)].collect()
         return spark.createDataFrame(localMoveStep(capped, labArr).toIndexedSeq)
           .toDF("node", "community")
-      }
-      // over the cap: fall through to the distributed step
+      case None => // over the cap: fall through to the distributed step
     }
 
     val e = eRaw
@@ -446,10 +439,8 @@ object Communities {
       .where($"x".isNotNull && $"y".isNotNull && $"x" =!= $"y" && $"w" > 0L)
       .groupBy($"x", $"y").agg(sum($"w").as("w"))
 
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = eRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(eRaw.as[(String, String, Long)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
         val labArr = labels.select(col("node").cast("string"),
@@ -457,7 +448,7 @@ object Communities {
         return spark.createDataFrame(
             localMoveStepWeighted(capped, labArr).toIndexedSeq)
           .toDF("node", "community")
-      }
+      case None => // over the cap: distributed tier
     }
 
     val e = eRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -572,13 +563,11 @@ object Communities {
       s"moveRounds must be in [1, 32], got $moveRounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val half = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        .where($"a".isNotNull && $"b".isNotNull && $"a" =!= $"b")
-      val symRaw = half.union(half.select($"b".as("a"), $"a".as("b"))).distinct()
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val half = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .where($"a".isNotNull && $"b".isNotNull && $"a" =!= $"b")
+    val symRaw = half.union(half.select($"b".as("a"), $"a".as("b"))).distinct()
+    Gate.collectAtMost(symRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
         val canon = capped.filter { case (a, b) => utf8Lt(a, b) }
@@ -586,7 +575,7 @@ object Communities {
         for (_ <- 1 to moveRounds) labArr = localMoveStep(canon, labArr)
         return spark.createDataFrame(labArr.toIndexedSeq)
           .toDF("node", "community")
-      }
+      case None => // over the cap: distributed tier
     }
     louvain(edges, srcCol, dstCol,
       labelPropagation(edges, srcCol, dstCol, lpaRounds, maxLocalEdges = 0L),
@@ -612,15 +601,13 @@ object Communities {
     // gate ONCE and replay all rounds over the same collected edge list —
     // calling the single-step gate per round would re-collect the edges
     // `rounds` times
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val eRaw = edges.select(
-          least(col(srcCol), col(dstCol)).as("x"),
-          greatest(col(srcCol), col(dstCol)).as("y"))
-        .where($"x".isNotNull && $"y".isNotNull && $"x" =!= $"y")
-        .distinct()
-      val capped = eRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val eRaw = edges.select(
+        least(col(srcCol), col(dstCol)).as("x"),
+        greatest(col(srcCol), col(dstCol)).as("y"))
+      .where($"x".isNotNull && $"y".isNotNull && $"x" =!= $"y")
+      .distinct()
+    Gate.collectAtMost(eRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
         var labArr = labels.select(col("node").cast("string"),
@@ -628,7 +615,7 @@ object Communities {
         for (_ <- 1 to rounds) labArr = localMoveStep(capped, labArr)
         return spark.createDataFrame(labArr.toIndexedSeq)
           .toDF("node", "community")
-      }
+      case None => // over the cap: distributed tier
     }
     var lab = labels
     for (i <- 1 to rounds) {
@@ -691,13 +678,11 @@ object Communities {
     // capped collect runs coarse LPA+moves, the intra filter, and the
     // singleton-seeded refine rounds in memory — composing the gated
     // operators would collect the edge list three times
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val half = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        .where($"a".isNotNull && $"b".isNotNull && $"a" =!= $"b")
-      val symRaw = half.union(half.select($"b".as("a"), $"a".as("b"))).distinct()
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val half = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .where($"a".isNotNull && $"b".isNotNull && $"a" =!= $"b")
+    val symRaw = half.union(half.select($"b".as("a"), $"a".as("b"))).distinct()
+    Gate.collectAtMost(symRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String, String)]
             .toDF("node", "community", "refined")
@@ -715,7 +700,7 @@ object Communities {
             labArr.map { case (n, c) => (n, c, refMap.getOrElse(n, n)) }
               .toIndexedSeq)
           .toDF("node", "community", "refined")
-      }
+      case None => // over the cap: distributed tier
     }
     val coarse = lpaLouvain(edges, srcCol, dstCol, lpaRounds, moveRounds,
         maxLocalEdges = 0L)
@@ -804,15 +789,8 @@ object Communities {
     // fetch). Local branch: the collected array IS the data. Both
     // branches unpersist as soon as their copy is materialized.
     val e0p = e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val cap = (maxLocalEdges / 2).toInt
-      // count-probe (the Betweenness pattern), not limit-collect: count
-      // materializes e0p into the cache either way, and on the FAIL side
-      // avoids fetching cap·2 strings to the driver just to throw them
-      // away (~120 MB + GC at the ×64 probe scale); on the PASS side the
-      // collect below reads the cache
-      if (e0p.count() <= cap) {
-        val arr = e0p.as[(String, String)].collect()
+    Gate.collectAtMost(e0p.as[(String, String)], maxLocalEdges / 2) match {
+      case Some(arr) =>
         e0p.unpersist(blocking = false)
         if (arr.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "community")
@@ -823,7 +801,7 @@ object Communities {
           labArr = localContractMoveProject(arr, labArr, hierMoveRounds)
         return spark.createDataFrame(labArr.toIndexedSeq)
           .toDF("node", "community")
-      }
+      case None => // over the cap: distributed tier
     }
     val e0c = e0p.localCheckpoint(true) // distributed: reused by all levels
     e0p.unpersist(blocking = false)
@@ -988,17 +966,14 @@ object Communities {
     // majority-of-labeled-neighbors, min-label tie-break in UTF8-byte
     // order, node drops back out when no neighbor is labeled this round —
     // round-for-round identical to the shuffle loop (parity-spec'd)
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(symRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val seedArr = seeds.select(col("node").cast("string"),
           col("label").cast("string")).as[(String, String)].collect()
         return spark.createDataFrame(
             localSpread(capped, seedArr, rounds).toIndexedSeq)
           .toDF("node", "label")
-      }
-      // over the cap: fall through to the distributed loop
+      case None => // over the cap: fall through to the distributed loop
     }
 
     val sym = symRaw

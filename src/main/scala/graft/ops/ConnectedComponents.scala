@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Ingest
+import graft.core.{Gate, Ingest}
 import org.apache.spark.graphx.{Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,18 +60,16 @@ object ConnectedComponents {
     // zipWithIndex jobs + id joins that dominate small/derived pair
     // graphs (dedup clusters, bipartite parity graphs). Distinct before
     // the limit only shrinks the collect; CC is duplicate-invariant.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = edges.select(col("src"), col("dst")).distinct()
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(edges.select(col("src"), col("dst")).distinct().as[(String, String)],
+        maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "component")
         return spark.createDataFrame(localUnionFind(capped).toIndexedSeq)
           .toDF("node", "component")
-      }
-      // over the cap: fall through to the distributed strategies
+      case None => // over the cap: fall through to the distributed strategies
     }
 
     // Persisted for the id-assignment count + endpoint joins; left to LRU
@@ -291,13 +289,11 @@ object ConnectedComponents {
     */
   def superMerger(df: DataFrame, from: String, to: String,
       maxLocalEdges: Long = 5_000_000L): DataFrame = {
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      // collect order is row order, so nodes come back by first appearance
-      val capped = Ingest.edges(df, from, to)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = df.sparkSession
+    import spark.implicits._
+    // collect order is row order, so nodes come back by first appearance
+    Gate.collectAtMost(Ingest.edges(df, from, to).as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         // the first root seen while scanning nodes in appearance order gets
         // the next counter (src/graph_solver.rs:78-89)
         val number = scala.collection.mutable.HashMap.empty[String, Long]
@@ -310,8 +306,7 @@ object ConnectedComponents {
             col(from).cast("string") === col("__from_node"), "left")
           .withColumn("group", coalesce(col("group"), lit(0L)))
           .drop("__from_node")
-      }
-      // over the cap: fall through to the distributed numbering
+      case None => // over the cap: fall through to the distributed numbering
     }
 
     val withRid = Ingest.withRowIdx(df, "_rid").persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,15 +43,13 @@ object Coreness {
       .where($"a".isNotNull && $"b".isNotNull && $"a" =!= $"b")
     val symRaw = half.union(half.select($"b".as("a"), $"a".as("b"))).distinct()
 
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(symRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, Long)].toDF("node", "core")
         return spark.createDataFrame(localHIndex(capped, rounds).toIndexedSeq)
           .toDF("node", "core")
-      }
+      case None => // over the cap: distributed tier
     }
 
     val sym = symRaw.localCheckpoint(true)

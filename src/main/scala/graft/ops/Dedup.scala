@@ -534,7 +534,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       threshold: Double = 0.8, maxBucketSize: Int = 1000,
       maxLocalTokens: Long = 2_500_000L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    if (maxLocalTokens > 0 && n >= 1) localMinHashPairs(df, idCol, textCol, n,
+    if (n >= 1) localMinHashPairs(df, idCol, textCol, n,
         numHashes, bands, threshold, maxBucketSize, maxLocalTokens) match {
       case Some(local) => return local
       case None => // over the cap or a contract edge: distributed tier
@@ -1185,23 +1185,27 @@ object Dedup extends org.apache.spark.internal.Logging {
     * is the honest plan.
     */
   def embeddingCosinePairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, maxLocalVectors: Long = 10000000L): DataFrame = {
-    val n = df.count()
-    if (n > maxLocalVectors) {
-      logWarning(s"embeddingCosinePairs: $n vectors exceed the broadcast " +
-        s"gate ($maxLocalVectors); switching to the distributed block-pair plan")
-      return embeddingCosinePairsBlocked(df, idCol, vecCol, threshold)
+      threshold: Double, maxLocalVectors: Long = 10000000L): DataFrame =
+    Similarity.vectorsAtMost(df, idCol, vecCol, maxLocalVectors) match {
+      case Some(v) => broadcastPairs(df.sparkSession, v, threshold)
+      case None =>
+        logWarning(s"embeddingCosinePairs: more than $maxLocalVectors vectors (the " +
+          "broadcast gate); switching to the distributed block-pair plan")
+        embeddingCosinePairsBlocked(df, idCol, vecCol, threshold)
     }
-    embeddingCosinePairsBroadcast(df, idCol, vecCol, threshold, maxLocalVectors)
-  }
 
   /** The broadcast strategy of [[embeddingCosinePairs]], callable directly
     * when the corpus is known small. */
   private[graft] def embeddingCosinePairsBroadcast(df: DataFrame, idCol: String,
-      vecCol: String, threshold: Double, maxLocalVectors: Long): DataFrame = {
-    val spark = df.sparkSession
+      vecCol: String, threshold: Double, maxLocalVectors: Long): DataFrame =
+    broadcastPairs(df.sparkSession,
+      Similarity.collectVectors(df, idCol, vecCol, maxLocalVectors), threshold)
+
+  private def broadcastPairs(spark: org.apache.spark.sql.SparkSession,
+      vectors: (Array[Long], Array[Array[Double]], Array[Double]),
+      threshold: Double): DataFrame = {
     import spark.implicits._
-    val (ids, vecs, norms) = Similarity.collectVectors(df, idCol, vecCol, maxLocalVectors)
+    val (ids, vecs, norms) = vectors
     val n = ids.length
     if (n == 0) return spark.emptyDataset[(Long, Long, Double)]
       .toDF("id_a", "id_b", "cosine")

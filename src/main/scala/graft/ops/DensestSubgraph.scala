@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -41,17 +42,15 @@ object DensestSubgraph {
     // gated local replay (the Scc/Truss pattern): the peel is a pure
     // function of the graph, so a capped collect replays the IDENTICAL
     // rounds without ~3 jobs per round of scheduling
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = canonical.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(canonical.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val profile = localPeel(capped, maxRounds)
         if (profile.isEmpty)
           return spark.emptyDataset[(Long, Long, Long, Long, Boolean)]
             .toDF("round", "n_nodes", "m_edges", "density_permille",
               "is_best")
         return render(spark, profile)
-      }
+      case None => // over the cap: distributed tier
     }
     var e = canonical.persist(StorageLevel.MEMORY_AND_DISK)
     val profile = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]

@@ -157,7 +157,7 @@ object DupSpans {
       require(n >= 2 && n <= 16, s"n must be in [2, 16], got $n")
       require(m >= 2, s"minDocs must be >= 2, got $m")
     }
-    if (maxLocalTokens > 0) localSpans(df, idCol, textCol, resolutions, maxLocalTokens) match {
+    localSpans(df, idCol, textCol, resolutions, maxLocalTokens) match {
       case Some(local) => return local
       case None => // over the cap or a contract edge: distributed tier
     }

@@ -27,8 +27,7 @@ object FrequencySketch {
 
   // j is a COLUMN (it comes from the explode), so the slice offset is an
   // expression over the fixed internal names (__md5, j); hex_to_long is
-  // the codegen parse (conv() measured 8x the md5's own cost,
-  // tools/CmsBench)
+  // the codegen parse (conv() measured 8x the md5's own cost at sf0.1)
   private def lane(width: Int): Column =
     graft.functions.functions.hex_to_long(
       expr("substring(__md5, j * 8 + 1, 8)")) % width

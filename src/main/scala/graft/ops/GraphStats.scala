@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -54,12 +55,11 @@ object GraphStats {
     // replaces a degree aggregate + two edge⋈degree shuffles; the double
     // coefficient is derived by the IDENTICAL SQL expression on the 1-row
     // result either way (parity-spec'd with the gate forced to 0)
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = undirected(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(undirected(edges, srcCol, dstCol).as[(String, String)],
+        maxLocalEdges) match {
+      case Some(capped) =>
         val deg = new scala.collection.mutable.HashMap[String, Long]
         capped.foreach { case (x, y) =>
           deg.update(x, deg.getOrElse(x, 0L) + 1)
@@ -76,7 +76,7 @@ object GraphStats {
         return spark.createDataFrame(Seq((mEnds, sXy, sX, sX2)))
           .toDF("m_ends", "s_xy", "s_x", "s_x2")
           .withColumn("assortativity", assortativityExpr)
-      }
+      case None => // over the cap: distributed tier
     }
     val e = undirected(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK) // degree agg + two end joins
@@ -125,12 +125,11 @@ object GraphStats {
     // one row derived from integer counts over labeled edges, so under the
     // cap a capped collect + in-memory tally replaces two edge⋈label
     // shuffles + three aggregates (parity-spec'd with the gate forced 0)
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = undirected(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(undirected(edges, srcCol, dstCol).as[(String, String)],
+        maxLocalEdges) match {
+      case Some(capped) =>
         val labArr = labels.select(col("node").cast("string"),
           col("community").cast("string")).as[(String, String)].collect()
         val comm = labArr.toMap
@@ -156,7 +155,7 @@ object GraphStats {
           .toDF("m_edges", "q_num", "q_den")
           .withColumn("modularity",
             expr("try_divide(cast(q_num as double), cast(q_den as double))"))
-      }
+      case None => // over the cap: distributed tier
     }
     val e = undirected(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -60,19 +61,17 @@ object Harmonic {
     // integer L/d terms) wins by an order of magnitude. Work is
     // |S|·(V+E); the secondary budget gate keeps an adversarial
     // dense-sample case off the driver even when the edge list fits.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = symRaw.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(symRaw.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val out = localHarmonic(capped, rounds, sourceRatePermille, salt, scale)
         if (out != null)
           return spark.createDataFrame(out.toIndexedSeq)
             .toDF("node", "n_reached", "harmonic_num")
             .withColumn("harmonic_den", lit(scale))
         // budget exceeded: fall through to the distributed loop
-      }
+      case None => // over the cap: distributed tier
     }
 
     val sym = symRaw

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -69,23 +70,21 @@ object HyperBall {
     // integer math) replays over dense per-node register arrays. The
     // V·2^p state budget keeps a high-p case off the driver even when the
     // edge list fits. Parity-spec'd with the gate forced to 0.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val fwd0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      val symD = fwd0.union(fwd0.select(col("b").as("a"), col("a").as("b")))
-        .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .distinct()
-      val capped = symD.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val fwd0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val symD = fwd0.union(fwd0.select(col("b").as("a"), col("a").as("b")))
+      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+      .distinct()
+    Gate.collectAtMost(symD.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val out = localBallRegisters(capped, rounds, p, hashBits,
           fromRadius = 0)
         if (out != null)
           return spark.createDataFrame(out.toIndexedSeq)
             .toDF("r", "node", "idx", "rho")
         // state budget exceeded: fall through to the distributed loop
-      }
+      case None => // over the cap: distributed tier
     }
 
     val sym = symEdges(edges, srcCol, dstCol)
@@ -209,16 +208,14 @@ object HyperBall {
   def ballRegisters(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, p: Int = 6, hashBits: Int = 60,
       maxLocalEdges: Long = 2000000L): DataFrame = {
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val fwd0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      val symD = fwd0.union(fwd0.select(col("b").as("a"), col("a").as("b")))
-        .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .distinct()
-      val capped = symD.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val fwd0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val symD = fwd0.union(fwd0.select(col("b").as("a"), col("a").as("b")))
+      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+      .distinct()
+    Gate.collectAtMost(symD.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val out = localBallRegisters(capped, rounds, p, hashBits,
           fromRadius = rounds)
         if (out != null)
@@ -233,7 +230,7 @@ object HyperBall {
               out.map(t => (t._2, t._3, t._4)).toIndexedSeq,
               spark.sparkContext.defaultParallelism))
             .toDF("node", "idx", "rho")
-      }
+      case None => // over the cap: distributed tier
     }
     ballRegistersByRound(edges, srcCol, dstCol, rounds, p, hashBits,
         maxLocalEdges)
@@ -332,17 +329,15 @@ object HyperBall {
     // these non-negative values); parity-spec'd with the gate at 0.
     val nf: DataFrame = {
       var localNf: DataFrame = null
-      if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val fwd0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        val symD = fwd0.union(fwd0.select(col("b").as("a"), col("a").as("b")))
-          .where(col("a").isNotNull && col("b").isNotNull &&
-            col("a") =!= col("b"))
-          .distinct()
-        val capped = symD.limit(maxLocalEdges.toInt + 1)
-          .as[(String, String)].collect()
-        if (capped.length <= maxLocalEdges) {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val fwd0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      val symD = fwd0.union(fwd0.select(col("b").as("a"), col("a").as("b")))
+        .where(col("a").isNotNull && col("b").isNotNull &&
+          col("a") =!= col("b"))
+        .distinct()
+      Gate.collectAtMost(symD.as[(String, String)], maxLocalEdges) match {
+        case Some(capped) =>
           val rows = scala.collection.mutable.ArrayBuffer
             .empty[(Int, Long, Long)]
           val ok = replayRegisters(capped, rounds, p, hashBits) {
@@ -365,7 +360,7 @@ object HyperBall {
           if (ok)
             localNf = spark.createDataFrame(rows.toIndexedSeq)
               .toDF("r", "n_nodes", "nf_est")
-        }
+        case None => // over the cap: distributed tier
       }
       if (localNf != null) localNf
       else {

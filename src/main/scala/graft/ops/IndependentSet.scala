@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,16 +45,14 @@ object IndependentSet {
     // are ~30 sequential distributed jobs — measured 24 s distributed vs
     // <1 s local at sf0.1. The local loop replays the EXACT same rounds
     // (same md5 priorities, same local-minimum rule).
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = canonical0.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(canonical0.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, Long)].toDF("node", "round")
         return spark.createDataFrame(
           localLuby(capped, rounds, salt).toIndexedSeq)
           .toDF("node", "round")
-      }
+      case None => // over the cap: distributed tier
     }
     var e = canonical0.localCheckpoint(true)
     var nodes = e.select(col("x").as("node"))

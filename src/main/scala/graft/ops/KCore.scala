@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,14 +54,14 @@ object KCore {
     // peels cost 3 shuffles each; under the cap one capped collect + the
     // IDENTICAL rounds in memory wins by an order of magnitude
     // (parity-spec'd with the gate forced to 0). Above: the shuffle loop.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = canonical(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges)
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(canonical(edges, srcCol, dstCol).as[(String, String)],
+        maxLocalEdges) match {
+      case Some(capped) =>
         return spark.createDataFrame(localKCore(capped, k, iters).toIndexedSeq)
           .toDF("node", "deg")
+      case None => // over the cap: distributed tier
     }
 
     var e = canonical(edges, srcCol, dstCol).localCheckpoint(true)

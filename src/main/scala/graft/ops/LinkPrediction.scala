@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -132,12 +133,11 @@ object LinkPrediction {
     // so under the edge cap the whole wedge+score+anti-join pipeline
     // replays in memory with identical integer arithmetic (parity-spec'd
     // with the gate forced to 0)
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = canonicalEdges(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(canonicalEdges(edges, srcCol, dstCol).as[(String, String)],
+        maxLocalEdges) match {
+      case Some(capped) =>
         val out = localWedgeScores(capped, maxCenterDegree, minCommon,
           withRa = true)
         if (out != null)
@@ -145,7 +145,7 @@ object LinkPrediction {
               out.map(r => (r._1, r._2, r._3, r._4)).toIndexedSeq)
             .toDF("a", "b", "n_common", "ra_q")
         // wedge budget exceeded: fall through to the distributed joins
-      }
+      case None => // over the cap: distributed tier
     }
     val e = edges.select(
         least(col(srcCol), col(dstCol)).as("x"),
@@ -191,12 +191,11 @@ object LinkPrediction {
 
     // same gated local replay as [[resourceAllocation]] (shared wedge
     // core; denominator degrees stay the exact uncapped ones)
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = canonicalEdges(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(canonicalEdges(edges, srcCol, dstCol).as[(String, String)],
+        maxLocalEdges) match {
+      case Some(capped) =>
         val out = localWedgeScores(capped, maxCenterDegree, minCommon,
           withRa = false)
         if (out != null)
@@ -205,7 +204,7 @@ object LinkPrediction {
             .withColumn("jaccard_permille",
               expr("(1000 * n_common) div (deg_a + deg_b - n_common)"))
         // wedge budget exceeded: fall through to the distributed joins
-      }
+      case None => // over the cap: distributed tier
     }
     val e = edges.select(
         least(col(srcCol), col(dstCol)).as("x"),

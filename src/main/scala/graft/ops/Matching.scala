@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,18 +54,16 @@ object Matching {
     // triples — priorities are collected as Spark computed them, so no
     // hash re-implementation can drift. Tie order (p, x, y) uses
     // UTF8-byte string comparison to match the window sort.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = withP.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(withP.as[(String, String, Long)], maxLocalEdges) match {
+      case Some(capped) =>
         val out = localMatching(capped, rounds)
         if (out.isEmpty)
           return spark.emptyDataset[(String, String, Long)]
             .toDF("x", "y", "round")
         return spark.createDataFrame(out.toIndexedSeq).toDF("x", "y", "round")
-      }
+      case None => // over the cap: distributed tier
     }
 
     var e = withP.localCheckpoint(true)

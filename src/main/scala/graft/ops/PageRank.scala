@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Ingest
+import graft.core.{Gate, Ingest}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -53,11 +53,9 @@ object PageRank {
     // jobs per round distributed. Same LocalGraph-style gate the per-source
     // traversal operators use (the reference itself is always single-node
     // here, rs:60-129). Above the gate: the distributed loop below.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = edges.groupBy($"src", $"dst").agg(count(lit(1)).as("m"))
-        .limit(maxLocalEdges.toInt + 1)
-        .as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(edges.groupBy($"src", $"dst").agg(count(lit(1)).as("m"))
+        .as[(String, String, Long)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, Double)].toDF("node", "score")
         val outdeg = new scala.collection.mutable.HashMap[String, Long]()
@@ -71,8 +69,7 @@ object PageRank {
           .toArray.distinct
         val result = localScores(nodeNames, collapsed, damping, maxIter, tol)
         return spark.createDataFrame(result.toIndexedSeq).toDF("node", "score")
-      }
-      // over the cap: fall through to the distributed loop
+      case None => // over the cap: fall through to the distributed loop
     }
 
     val e = edges.select($"src", $"dst").persist(StorageLevel.MEMORY_AND_DISK)
@@ -244,11 +241,9 @@ object PageRank {
       case None => edges0.select($"src", $"dst", lit(1L).as("__w"))
     }
 
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = edges.groupBy($"src", $"dst").agg(sum($"__w").as("m"))
-        .limit(maxLocalEdges.toInt + 1)
-        .as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(edges.groupBy($"src", $"dst").agg(sum($"__w").as("m"))
+        .as[(String, String, Long)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, Long)].toDF("node", "rank_q")
         val outdeg = new scala.collection.mutable.HashMap[String, Long]()
@@ -289,7 +284,7 @@ object PageRank {
           it += 1
         }
         return spark.createDataFrame(names.zip(r).toIndexedSeq).toDF("node", "rank_q")
-      }
+      case None => // over the cap: distributed tier
     }
 
     // distributed: integer join-iteration, localCheckpoint per round

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -64,16 +65,13 @@ object Scc {
     // distributed peeling loop's dozens of sequential scheduled jobs by
     // orders of magnitude on small/filtered graphs. The limit stops the
     // collect early when over the cap; above it, the shuffle loop below.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = distinctEdges.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(distinctEdges.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("node", "scc_id")
         return spark.createDataFrame(localTarjan(capped).toIndexedSeq)
           .toDF("node", "scc_id")
-      }
-      // over the cap: fall through to the distributed loop
+      case None => // over the cap: fall through to the distributed loop
     }
 
     var e = distinctEdges.localCheckpoint(true)

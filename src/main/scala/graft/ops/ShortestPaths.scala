@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Ingest, LocalGraph}
+import graft.core.{Gate, Ingest, LocalGraph}
 import org.apache.spark.graphx.{Edge => GXEdge, EdgeTriplet, Graph, Pregel, VertexId}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -58,14 +58,12 @@ object ShortestPaths {
 
     val quantized = edges.select($"src", $"dst",
       ($"weight" * lit(1000.0)).cast("long").as("cost"))
-    // cheap COUNT probe before any collect (the PageRank.scores pattern,
-    // VERDICT r7 item 2): above the broadcast gate we fall through to the
-    // distributed Pregel path instead of failing — same quantization, same
-    // emission rules, spec-pinned equal output with the gate forced to 0.
-    val nEdges = quantized.count()
-    if (nEdges > maxLocalEdges)
-      return allPairsPregel(edges, directed)
-    val rows = quantized.as[(String, String, Long)].collect()
+    // one capped collect (VERDICT r7 item 2): above the broadcast gate we
+    // fall through to the distributed Pregel path instead of failing —
+    // same quantization, same emission rules, spec-pinned equal output
+    // with the gate forced to 0.
+    val rows = Gate.collectAtMost(quantized.as[(String, String, Long)], maxLocalEdges)
+      .getOrElse(return allPairsPregel(edges, directed))
     val graph = LocalGraph.fromEdges(rows.toSeq, directed)
     val n = graph.numNodes
     if (n == 0) return spark.emptyDataset[(String, String, Double)]

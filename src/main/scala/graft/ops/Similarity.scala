@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -107,28 +108,28 @@ object Similarity {
     * sides are huge, use the LSH path instead.
     */
   private[graft] def collectVectors(df: DataFrame, idCol: String, vecCol: String,
-      maxVectors: Long): (Array[Long], Array[Array[Double]], Array[Double]) = {
+      maxVectors: Long): (Array[Long], Array[Array[Double]], Array[Double]) =
+    vectorsAtMost(df, idCol, vecCol, maxVectors).getOrElse(throw new IllegalArgumentException(
+      s"broadcast vector fast path supports <= $maxVectors vectors; use the LSH scale path"))
+
+  /** [[collectVectors]], or None over `maxVectors` rows ([[Gate.collectAtMost]]). */
+  private[graft] def vectorsAtMost(df: DataFrame, idCol: String, vecCol: String,
+      maxVectors: Long): Option[(Array[Long], Array[Array[Double]], Array[Double])] = {
     import org.apache.spark.sql.types._
     val idType = df.schema(idCol).dataType
-    // integral only: fractional ids would truncate on the long cast and
-    // silently collide
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"broadcast vector paths require an integral id column; '$idCol' is " +
-        s"${idType.simpleString} — map ids to longs first")
-    // single scan: limit(max+1) both enforces the cap and collects
-    val rows = df.select(col(idCol).cast("long"),
-        col(vecCol).cast("array<double>"))
-      .limit(if (maxVectors < Int.MaxValue - 1) maxVectors.toInt + 1 else Int.MaxValue)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(rows.length <= maxVectors,
-      s"broadcast vector fast path supports <= $maxVectors vectors; " +
-        "use the LSH scale path")
-    val ids = rows.map(_._1)
-    val vecs = rows.map(_._2)
-    val norms = vecs.map(v => { var s = 0.0; var i = 0; while (i < v.length) { s += v(i) * v(i); i += 1 }; s })
-    (ids, vecs, norms)
+    Gate.collectAtMost(df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")),
+        maxVectors).map { got =>
+      // integral only: fractional ids would truncate on the long cast and
+      // silently collide
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+        s"broadcast vector paths require an integral id column; '$idCol' is " +
+          s"${idType.simpleString} — map ids to longs first")
+      val rows = got.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+      val ids = rows.map(_._1)
+      val vecs = rows.map(_._2)
+      val norms = vecs.map(v => { var s = 0.0; var i = 0; while (i < v.length) { s += v(i) * v(i); i += 1 }; s })
+      (ids, vecs, norms)
+    }
   }
 
   private[graft] def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -914,11 +915,11 @@ object Similarity {
           nearestCentroid(vec.slice(s * subDim, (s + 1) * subDim), bk(s))))
       }
     }
-    val codes = encoded.limit(maxBroadcastCodes + 1).collect()
-    require(codes.length <= maxBroadcastCodes,
-      s"PQ code table exceeds maxBroadcastCodes=$maxBroadcastCodes; " +
-        "use ivfPqTopKPortable (IVF-PQ) — ADC over probed cells only, " +
-        "no broadcast code table, no exhaustive scan")
+    val codes = Gate.collectAtMost(encoded, maxBroadcastCodes).getOrElse(
+      throw new IllegalArgumentException(
+        s"PQ code table exceeds maxBroadcastCodes=$maxBroadcastCodes; " +
+          "use ivfPqTopKPortable (IVF-PQ) — ADC over probed cells only, " +
+          "no broadcast code table, no exhaustive scan"))
     val bcCodes = spark.sparkContext.broadcast(codes)
 
     // widen() the query side first: the scan-shaped Dataset otherwise

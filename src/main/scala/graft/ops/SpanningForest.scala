@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,17 +51,15 @@ object SpanningForest {
     // 30-edge nation graph). The local loop replays the SAME rounds
     // ((w, x, y) argmin per component, CC contraction), so `round` values
     // match the distributed path exactly.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = canonical.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(canonical.as[(String, String, Long)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String, Long, Long)]
             .toDF("x", "y", "w", "round")
         return spark.createDataFrame(
           localBoruvka(capped, maxRounds).toIndexedSeq)
           .toDF("x", "y", "w", "round")
-      }
+      case None => // over the cap: distributed tier
     }
     val e0 = canonical.localCheckpoint(true)
     var lab = e0.select(col("x").as("node"))

@@ -111,7 +111,7 @@ object Tokenizer {
   def tokenStats(docs: DataFrame, idCol: String, textCol: String,
       vocab: Seq[String] = defaultVocab,
       maxLocalTokens: Long = 10_000_000L): DataFrame = {
-    if (maxLocalTokens > 0) localTokenStats(docs, idCol, textCol, vocab, maxLocalTokens) match {
+    localTokenStats(docs, idCol, textCol, vocab, maxLocalTokens) match {
       case Some(local) => return local
       case None => // over the cap or a contract edge: distributed tier
     }

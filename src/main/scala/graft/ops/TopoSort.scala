@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -52,10 +53,8 @@ object TopoSort {
     // Longest-path layers are a unique function of the DAG (no
     // tie-breaking anywhere), so Kahn + DP computes the IDENTICAL result
     // (parity pinned in SetSketchTopoSpec with maxLocalEdges = 0).
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = distinctEdges.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(distinctEdges.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val nodes = (capped.map(_._1) ++ capped.map(_._2)).distinct
         val indeg = scala.collection.mutable.HashMap.empty[String, Int]
           .withDefaultValue(0)
@@ -80,7 +79,7 @@ object TopoSort {
           s"longestPathLayers: ${nodes.length - processed} nodes on a " +
             "cycle (run Scc.condensationEdges first)")
         return nodes.map(n => (n, layer(n))).toSeq.toDF("node", "layer")
-      }
+      case None => // over the cap: distributed tier
     }
 
     val e = distinctEdges.persist(StorageLevel.MEMORY_AND_DISK)

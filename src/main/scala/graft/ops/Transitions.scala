@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,10 +100,9 @@ object Transitions {
     val st = c.select(col("a").as("s")).distinct()
     val tr = c.join(st.select(col("s").as("b")), Seq("b"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (maxLocalMatrix > 0 && maxLocalMatrix < Int.MaxValue - 1) {
-      val capped = tr.select(col("a"), col("b"), col("n"))
-        .limit(maxLocalMatrix.toInt + 1).as[(String, String, Long)].collect()
-      if (capped.length <= maxLocalMatrix) {
+    Gate.collectAtMost(tr.select(col("a"), col("b"), col("n")).as[(String, String, Long)],
+        maxLocalMatrix) match {
+      case Some(capped) =>
         val states = st.as[String].collect().sorted
         val k = states.length.toLong
         if (k == 0L)
@@ -124,7 +124,7 @@ object Transitions {
         return spark.createDataFrame(
             states.toIndexedSeq.map(s => (s, pi(s))))
           .toDF("state", "pi_ppm").orderBy("state")
-      }
+      case None => // over the cap: distributed tier
     }
     val outd = tr.groupBy("a").agg(sum(col("n")).as("o"))
     val k = st.count()

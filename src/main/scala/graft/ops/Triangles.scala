@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,17 +46,15 @@ object Triangles {
     // memory replaces ~6 shuffle stages. The wedge-work budget inside
     // localTriangles keeps an adversarial dense case off the driver even
     // when the edge list fits; parity-spec'd with the gate forced to 0.
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = canonical(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(canonical(edges, srcCol, dstCol).as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val out = localTriangles(capped)
         if (out != null)
           return spark.createDataFrame(out.toIndexedSeq).toDF("a", "b", "c")
         // wedge budget exceeded: fall through to the distributed joins
-      }
+      case None => // over the cap: distributed tier
     }
     triangleListDistributed(edges, srcCol, dstCol)
   }
@@ -186,12 +185,10 @@ object Triangles {
     // composing the degree aggregate with triangleList's own gate would
     // run the (often expensive) upstream edge derivation twice; integer
     // (deg, n_triangles) pairs feed the IDENTICAL coef_pm expression
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val capped = canonical(edges, srcCol, dstCol)
-        .limit(maxLocalEdges.toInt + 1).as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Gate.collectAtMost(canonical(edges, srcCol, dstCol).as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         val tris = localTriangles(capped)
         if (tris != null) {
           val deg = new scala.collection.mutable.HashMap[String, Long]
@@ -215,7 +212,7 @@ object Triangles {
                 (col("deg") * (col("deg") - 1))).cast("long"))
             .select(col("node"), col("deg"), col("n_triangles"), col("coef_pm"))
         }
-      }
+      case None => // over the cap: distributed tier
     }
     val e = canonical(edges, srcCol, dstCol)
     val deg = e.select(col("x").as("node"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,16 +45,14 @@ object Truss {
       .where(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .distinct()
 
-    if (maxLocalEdges > 0 && maxLocalEdges < Int.MaxValue - 1) {
-      val capped = canonical.limit(maxLocalEdges.toInt + 1)
-        .as[(String, String)].collect()
-      if (capped.length <= maxLocalEdges) {
+    Gate.collectAtMost(canonical.as[(String, String)], maxLocalEdges) match {
+      case Some(capped) =>
         if (capped.isEmpty)
           return spark.emptyDataset[(String, String)].toDF("x", "y")
         return spark.createDataFrame(
           localTruss(capped, minSupport, maxRounds).toIndexedSeq)
           .toDF("x", "y")
-      }
+      case None => // over the cap: distributed tier
     }
 
     var e = canonical.localCheckpoint(true)
