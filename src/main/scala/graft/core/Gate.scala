@@ -2,7 +2,7 @@ package graft.core
 
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -37,10 +37,6 @@ object Gate {
       val got = if (cap < Int.MaxValue - 1) ds.limit(cap.toInt + 1).collect() else ds.collect()
       if (got.length > cap) None else Some(got)
     }
-
-  /** `df`'s rows when Σ size(row) ≤ cap, else None: see the RDD variant. */
-  def collectWithin(df: DataFrame, cap: Long)(size: Row => Long): Option[Array[Row]] =
-    collectWithin(df.rdd, cap)(size)
 
   /** `rdd`'s elements when Σ size(x) ≤ cap, else None. At cap ≤ 0 `rdd` is
     * not even built (building a plan's RDD under AQE runs its shuffle

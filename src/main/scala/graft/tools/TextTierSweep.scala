@@ -135,7 +135,7 @@ object TextTierSweep {
     def call(input: DataFrame, gate: Long): (Long, Boolean) = op match {
       case "bpe" =>
         val (merges, segs) = graft.ops.BpeTrain.train(input, 3, maxLocalSymbols = gate)
-        (consume(merges) + consume(segs), ranLocal(segs))
+        (consume(merges) + consume(segs), graft.ops.BpeTrain.ranLocalTier(segs))
       case other =>
         val out = other match {
           case "spans" =>

@@ -21,4 +21,13 @@ object shims {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `SparkSession.internalCreateDataFrame` is `private[sql]` in Spark 4:
+    * a DataFrame of `schema` over internal-form rows that tasks compute,
+    * without a driver-side copy. */
+  def dataFrameOf(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

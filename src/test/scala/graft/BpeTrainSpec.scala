@@ -2,7 +2,8 @@ package graft
 
 import graft.ops.BpeTrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class BpeTrainSpec extends AnyFunSuite {
@@ -20,8 +21,8 @@ class BpeTrainSpec extends AnyFunSuite {
          (x.getInt(0), x.getString(1), x.getString(2), x.getLong(3))).toSeq,
        r.orderBy("w", "pos").collect().map(x =>
          (x.getString(0), x.getInt(1), x.getString(2))).toSeq)
-    assert(r.queryExecution.logical.isInstanceOf[LocalRelation] == local)
-    assert(!dr.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(BpeTrain.ranLocalTier(r) == local)
+    assert(!BpeTrain.ranLocalTier(dr))
     assert(m.schema == dm.schema && r.schema == dr.schema)
     val got = rows(m, r)
     assert(got == rows(dm, dr))
@@ -122,5 +123,69 @@ class BpeTrainSpec extends AnyFunSuite {
         Seq(("ab", Some(1L)), ("ab", Some(2L))),
         Seq(("ab", Some(2L)), ("abc", None), ("bc", Some(1L)))))
       tiers(words.toDF("w", "n_w"), rounds = 1, local = false)
+  }
+
+  test("a non-string w column trains on the distributed tier at every gate") {
+    val words = Seq((1121, 2L), (212, 1L)).toDF("w", "n_w")
+    def rows(m: DataFrame, r: DataFrame) =
+      (m.orderBy("round").collect().map(_.toSeq).toSeq,
+       r.orderBy("w", "pos").collect().map(_.toSeq).toSeq)
+    val (m, r) = BpeTrain.train(words, rounds = 2)
+    val (dm, dr) = BpeTrain.train(words, rounds = 2, maxLocalSymbols = 0)
+    assert(!BpeTrain.ranLocalTier(r))
+    val got = rows(m, r)
+    assert(got == rows(dm, dr))
+    assert(got._1.head == Seq(1, "1", "2", 3L))
+  }
+
+  test("tiers agree on words that are not valid UTF-8") {
+    // ab\xff and ab\xfe differ only in an invalid byte that decoding would
+    // replace with U+FFFD; the third word holds a real U+FFFD
+    val df = Seq(("6162ff", 3L), ("6162fe", 2L), ("6162efbfbd", 1L)).toDF("h", "n_w")
+      .select(expr("cast(unhex(h) as string)").as("w"), $"n_w")
+    def hexRows(m: DataFrame, r: DataFrame) =
+      (m.orderBy("round").collect().map(_.toSeq).toSeq,
+       r.select(hex($"w").as("w"), $"pos", hex($"sym").as("sym")).orderBy("w", "pos")
+         .collect().map(_.toSeq).toSeq)
+    val (m, r) = BpeTrain.train(df, rounds = 3)
+    val (dm, dr) = BpeTrain.train(df, rounds = 3, maxLocalSymbols = 0)
+    assert(BpeTrain.ranLocalTier(r))
+    val got = hexRows(m, r)
+    assert(got == hexRows(dm, dr))
+    // (ab, \xff) wins rounds 2 and 3 and is recorded as (ab, U+FFFD): it
+    // merges the real U+FFFD, never the invalid byte
+    assert(got._1 == Seq(Seq(1, "a", "b", 6L), Seq(2, "ab", "\uFFFD", 3L),
+      Seq(3, "ab", "\uFFFD", 3L)))
+    assert(got._2 == Seq(Seq("6162EFBFBD", 1, "6162EFBFBD"), Seq("6162FE", 1, "6162"),
+      Seq("6162FE", 3, "FE"), Seq("6162FF", 1, "6162"), Seq("6162FF", 3, "FF")))
+  }
+
+  test("a merges-only caller starts no segmentation job") {
+    val words = Seq(("aaab", 2L), ("ab", 3L), ("baba", 1L)).toDF("w", "n_w")
+    var segs: DataFrame = null
+    val trainJobs = TestSpark.jobsOf {
+      val (m, r) = BpeTrain.train(words, rounds = 3)
+      assert(m.collect().length == 3)
+      segs = r
+    }
+    assert(BpeTrain.ranLocalTier(segs))
+    val id = segs.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+    def touches(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
+      jobs.exists(_.stageInfos.exists(_.rddInfos.exists(_.id == id)))
+    assert(trainJobs.nonEmpty && !touches(trainJobs))
+    assert(touches(TestSpark.jobsOf(segs.collect())))
+  }
+
+  test("the local segmentation gives the same rows each time it is consumed") {
+    val rnd = new scala.util.Random(11)
+    val words = Seq.fill(200)(Seq.fill(2 + rnd.nextInt(6))("abcé"(rnd.nextInt(4))).mkString)
+      .distinct.map(w => (w, 1L + rnd.nextInt(5)))
+    val (_, segs) = BpeTrain.train(words.toDF("w", "n_w").repartition(3), rounds = 4)
+    assert(BpeTrain.ranLocalTier(segs))
+    assert(segs.queryExecution.toRdd.getNumPartitions == 3)
+    def rows = segs.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).sorted.toSeq
+    val first = rows
+    assert(first.nonEmpty && rows == first && segs.count() == first.size)
+    assert(first.groupBy(_._1).forall { case (w, ss) => ss.sortBy(_._2).map(_._3).mkString == w })
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import graft.core.Gate
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,32 +11,7 @@ class GateSpec extends AnyFunSuite {
 
   private def units(t: String) = Gate.textUnits(UTF8String.fromString(t))
 
-  /** The Spark jobs `body` starts on this thread. A sentinel job in a
-    * second group follows it; the listener bus delivers events in order,
-    * so once the sentinel is seen every job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"gate-spec-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-end" => sentinel.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "GateSpec")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "GateSpec")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job not seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Unit): Int = TestSpark.jobsOf(body).size
 
   private def rows(n: Int) = spark.range(n).as[Long]
 
@@ -76,15 +48,15 @@ class GateSpec extends AnyFunSuite {
 
   test("collectWithin: a cap <= 0 is None without a Spark job, even on an empty input") {
     val empty = Seq.empty[(String, Long)].toDF("k", "v")
-    assert(Gate.collectWithin(empty, 0L)(_ => 1L).isEmpty)
-    assert(Gate.collectWithin(empty, 1L)(_ => 1L).map(_.length) == Some(0))
+    assert(Gate.collectWithin(empty.rdd, 0L)(_ => 1L).isEmpty)
+    assert(Gate.collectWithin(empty.rdd, 1L)(_ => 1L).map(_.length) == Some(0))
     // an aggregate: building its RDD would run the shuffle stage
     val agg = rows(10).toDF("x").groupBy(col("x") % 3).count()
     var got: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
-    assert(jobsOf { got = Gate.collectWithin(agg, 0L)(_ => 1L) } == 0)
+    assert(jobsOf { got = Gate.collectWithin(agg.rdd, 0L)(_ => 1L) } == 0)
     assert(got.isEmpty)
-    assert(Gate.collectWithin(agg, 3L)(_ => 1L).map(_.length) == Some(3))
-    assert(Gate.collectWithin(agg, 2L)(_ => 1L).isEmpty)
+    assert(Gate.collectWithin(agg.rdd, 3L)(_ => 1L).map(_.length) == Some(3))
+    assert(Gate.collectWithin(agg.rdd, 2L)(_ => 1L).isEmpty)
   }
 
   test("loud gates take an Int.MaxValue cap and still fail over a small one") {
