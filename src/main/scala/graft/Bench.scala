@@ -48,29 +48,9 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // optional args: subset of query names (local iteration); default all
     val wanted = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r12 OPT (guide §2.2: size partitions by DATA, not by a constant):
-      // let AQE re-size CACHED plan output too (off by default only for
-      // exchange-reuse compatibility). The iterative/persisting operators
-      // keep loop state and internal tables cached; without this flag a
-      // cached table is frozen at spark.sql.shuffle.partitions regardless
-      // of size, so every round over a small cached state paid ~32 tasks
-      // of pure scheduling dust, while at scale the same flag coalesces
-      // toward the advisory partition size — adaptive in both regimes,
-      // nothing tuned to local[32]. A/B at sf0.1 (identical binary):
-      // q_wl_components 3.9→1.8 s, q_dup_spans_multi 7.6→3.9 s,
-      // q_rich_club 2.5→1.9 s, 12-query cache-heavy subset 32.1→28.3 s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
     // ERROR: the driver captures this output; WARN-level WindowExec noise
     // from intentionally tiny global windows (25-row nation dim) drowns it
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local(cpus, "ERROR")
     // warm-up: touch every table once so the first timed query doesn't
     // absorb session/codegen/footer-read startup costs
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -77,40 +77,37 @@ object Gate {
     * local pass holds per-row state (the collected row, an output row,
     * per-document arrays) that its token count does not show. The text
     * caps were measured on 60-token documents, so this bounds a capped
-    * input's rows by the measured row count. Documents of 1–5 tokens show
-    * why (`graft.tools.TextTierSweep tokenstats@1-5`, 1 GB heap): 333k of
-    * them — 1M tokens — raised the heap by 377–455 MB in
-    * `Tokenizer.tokenStats`'s local tier, 1.25M ran it out of memory. */
+    * input's rows by the measured row count; it now bounds the local
+    * tiers of `DupSpans.dupSpansMulti` and `Dedup.minHashLshPairs`. The
+    * floor was set by a measurement on documents of 1–5 tokens
+    * (`graft.tools.TextTierSweep tokenstats@1-5`, 1 GB heap), in the
+    * driver-local tier `Tokenizer.tokenStats` had then: 333k of them — 1M
+    * tokens — raised the heap by 377–455 MB, 1.25M ran it out of memory. */
   val RowUnits = 60L
 
   /** The input of a text operator's driver-local tier: `df`'s (id, text)
     * rows in Spark's internal form — a string id or text as the
     * `UTF8String` of its stored bytes, so malformed UTF-8 reaches the
     * local pass exactly as the distributed expressions see it; an
-    * integral id boxed — with the id column's field. None, so the
-    * distributed tier runs, when the id is neither integral nor string,
-    * the text is not a string, an id repeats (the distributed `groupBy`
-    * merges such rows), more than `maxNullIds` ids are null, or
-    * Σ max([[RowUnits]], [[textUnits]]) is over `cap`. Rows with a null
-    * text are dropped unless `nullTexts`; they count [[RowUnits]]. */
+    * integral id boxed — with the id column's field; rows with a null
+    * text are dropped. None, so the distributed tier runs, when the id is
+    * neither integral nor string, the text is not a string, an id repeats
+    * (the distributed tiers group by the id), more than `maxNullIds` ids
+    * are null, or Σ max([[RowUnits]], [[textUnits]]) is over `cap`. */
   def collectTexts(df: DataFrame, idCol: String, textCol: String, cap: Long,
-      nullTexts: Boolean, maxNullIds: Int)
-      : Option[(StructField, Array[(Any, UTF8String)])] = {
+      maxNullIds: Int): Option[(StructField, Array[(Any, UTF8String)])] = {
     val idField = df.select(col(idCol)).schema.head
     val idType = idField.dataType
-    val in0 = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    val in = df.select(col(idCol).as("id"), col(textCol).as("text"))
     if (!Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)(idType) ||
-        in0.schema("text").dataType != StringType) return None
-    val in = if (nullTexts) in0 else in0.where(col("text").isNotNull)
+        in.schema("text").dataType != StringType) return None
     // internal rows are reused by their iterator: copy what is kept
-    val got = collectWithin(in.queryExecution.toRdd.map { r =>
+    val got = collectWithin(in.where(col("text").isNotNull).queryExecution.toRdd.map { r =>
       val id = if (r.isNullAt(0)) null
         else if (idType == StringType) r.getUTF8String(0).clone()
         else r.get(0, idType)
-      (id: Any, if (r.isNullAt(1)) null else r.getUTF8String(1).clone())
-    }, cap) { case (_, t) =>
-      if (t == null) RowUnits else math.max(RowUnits, textUnits(t))
-    }.getOrElse(return None)
+      (id: Any, r.getUTF8String(1).clone())
+    }, cap)(t => math.max(RowUnits, textUnits(t._2))).getOrElse(return None)
     val seen = scala.collection.mutable.HashSet.empty[Any]
     var nulls = 0
     if (!got.forall { case (id, _) =>

@@ -251,11 +251,6 @@ object Communities {
     Array.tabulate(n)(v => (names(v), names(lab(v))))
   }
 
-  /** Convenience digest: per-community member count, for community-size
-    * distributions. */
-  def communitySizes(labeled: DataFrame): DataFrame =
-    labeled.groupBy(col("community")).agg(count(lit(1)).as("n_members"))
-
   /** One synchronous Louvain-style move step: every node simultaneously
     * re-evaluates, against the CURRENT partition, which neighboring
     * community (or its own) maximizes the modularity gain of hosting it,

@@ -484,16 +484,12 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select(col("id"), col("__pick.shingle").as("shingle"))
   }
 
-  /** MinHash signature per document: the shingle string is hashed ONCE
-    * (xxhash64), then the i-th hash function is the cheap fixed-width
-    * xxhash64(seed_i, base) over that long — 64 string hashes per row
-    * would dominate the signature pass otherwise.
+  /** MinHash signature per document of (id, shingle) rows: the shingle
+    * string is hashed ONCE (xxhash64), then the i-th hash function is the
+    * cheap fixed-width xxhash64(seed_i, base) over that long — 64 string
+    * hashes per row would dominate the signature pass otherwise.
     * minhash_i = min over shingles, i in [0, numHashes).
     */
-  def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 64): DataFrame =
-    minHashFromShingles(shingles(df, idCol, textCol, n), numHashes)
-
   private def minHashFromShingles(sh: DataFrame, numHashes: Int): DataFrame = {
     val based = sh.withColumn("h", xxhash64(col("shingle")))
     val mins = (0 until numHashes).map(i =>
@@ -589,7 +585,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val (idField, rows) = graft.core.Gate.collectTexts(df, idCol, textCol, cap,
-      nullTexts = false, maxNullIds = 1).getOrElse(return None)
+      maxNullIds = 1).getOrElse(return None)
     val ids = rows.map(_._1)
     val space = UTF8String.fromString(" ")
     val sets = rows.map { case (_, t) =>

@@ -303,7 +303,7 @@ object DupSpans {
   private def localSpans(df: DataFrame, idCol: String, textCol: String,
       resolutions: Seq[(Int, Int)], cap: Long): Option[DataFrame] = {
     val (idField, rows) = graft.core.Gate.collectTexts(df, idCol, textCol, cap,
-      nullTexts = false, maxNullIds = 0).getOrElse(return None)
+      maxNullIds = 0).getOrElse(return None)
     val ids = rows.map(_._1)
     val bytes = rows.map(_._2.getBytes)
     val nDocs = ids.length

@@ -1,21 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke for the driver's t1 gate: SparkEntry.entry must return >0 rows. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r12 OPT: AQE sizing for cached plans (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local("8", "WARN")
     val df = graft.SparkEntry.entry(spark)
     df.show(10, truncate = false)
     println(s"[entry-smoke] rows=${df.count()}")

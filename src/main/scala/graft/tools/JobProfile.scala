@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,17 +17,7 @@ object JobProfile {
     val name = if (args.nonEmpty) args(0) else "q1_agg"
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r12 OPT: AQE sizing for cached plans (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local(cpus, "ERROR")
 
     final case class JobRec(id: Int, desc: String, t0: Long, var t1: Long = 0L)
     val jobs = mutable.LinkedHashMap[Int, JobRec]()

@@ -1,22 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted plans for selected queries (dev tool for plan review). */
 object Plans {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else Seq("q1_agg", "q_components")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r12 OPT: AQE sizing for cached plans (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local("8", "ERROR")
     names.foreach { n =>
       println(s"===== $n =====")
       graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.01")

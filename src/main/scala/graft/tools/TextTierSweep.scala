@@ -9,12 +9,13 @@ import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** Sizes the driver-local tiers of `BpeTrain.train`,
-  * `DupSpans.dupSpansMulti`, `Dedup.minHashLshPairs` and
-  * `Tokenizer.tokenStats`: on seeded generated inputs of growing size it
-  * times each operator with the local tier forced (gate at Long.MaxValue)
-  * and with the distributed tier forced (gate at 0), and records the
-  * largest heap in use after any garbage collection during the call, less
-  * the heap in use before it.
+  * `DupSpans.dupSpansMulti` and `Dedup.minHashLshPairs`: on seeded
+  * generated inputs of growing size it times each operator with the local
+  * tier forced (gate at Long.MaxValue) and with the distributed tier
+  * forced (gate at 0), and records the largest heap in use after any
+  * garbage collection during the call, less the heap in use before it.
+  * `Tokenizer.tokenStats`, which has one plan and no tier, is timed the
+  * same way (tier "plan"; tier arguments are ignored).
   *
   *   - bpe: distinct words of 4–12 letters over a 20-letter alphabet with
   *     counts in [1, 100], until Σ length(w) reaches the size; 3 rounds.
@@ -121,21 +122,16 @@ object TextTierSweep {
     }
     val (tierArgs, sizeArgs) = args.tail.partition(a => a.head.isLetter)
     val sizes = sizeArgs.map(_.toLong)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local("4", "WARN")
     watchGc()
-    def ranLocal(df: DataFrame) = df.queryExecution.logical
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    // (output digest, whether the local tier ran)
-    def call(input: DataFrame, gate: Long): (Long, Boolean) = op match {
+    def tier(local: Boolean) = if (local) "local" else "distributed"
+    // (output digest, the tier that ran)
+    def call(input: DataFrame, gate: Long): (Long, String) = op match {
       case "bpe" =>
         val (merges, segs) = graft.ops.BpeTrain.train(input, 3, maxLocalSymbols = gate)
-        (consume(merges) + consume(segs), graft.ops.BpeTrain.ranLocalTier(segs))
+        (consume(merges) + consume(segs), tier(graft.ops.BpeTrain.ranLocalTier(segs)))
+      case "tokenstats" =>
+        (consume(graft.ops.Tokenizer.tokenStats(input, "doc_id", "text")), "plan")
       case other =>
         val out = other match {
           case "spans" =>
@@ -143,17 +139,18 @@ object TextTierSweep {
           case "minhash" =>
             graft.ops.Dedup.minHashLshPairs(input, "doc_id", "text", 3, 64, 16, 0.5,
               maxLocalTokens = gate)
-          case "tokenstats" =>
-            graft.ops.Tokenizer.tokenStats(input, "doc_id", "text", maxLocalTokens = gate)
         }
-        (consume(out), ranLocal(out))
+        (consume(out), tier(out.queryExecution.logical
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
     }
     def gen(size: Long) = (op match {
       case "bpe" => bpeWords(spark, size)
       case _ => spanDocs(spark, size, nearCopies = op == "minhash", lens = lens)
     })
       .repartition(4).persist(StorageLevel.MEMORY_AND_DISK)
-    val tiers = (if (tierArgs.isEmpty) Seq("local", "distributed") else tierArgs.toSeq).map {
+    val tiers = (if (op == "tokenstats") Seq("plan")
+      else if (tierArgs.isEmpty) Seq("local", "distributed") else tierArgs.toSeq).map {
+      case "plan" => "plan" -> 0L
       case "local" => "local" -> Long.MaxValue
       case "distributed" => "distributed" -> 0L
       case g => g -> g.stripPrefix("gate=").toLong
@@ -171,13 +168,12 @@ object TextTierSweep {
           val base = heapUsed()
           peakAfterGc.set(0L)
           val t0 = System.nanoTime()
-          val (digest, local) = call(input, gate)
+          val (digest, ran) = call(input, gate)
           val sec = (System.nanoTime() - t0) / 1e9
-          (sec, math.max(0L, peakAfterGc.get - base), digest, local)
+          (sec, math.max(0L, peakAfterGc.get - base), digest, ran)
         }
-        val (sec, _, digest, local) = runs.minBy(_._1)
+        val (sec, _, digest, ran) = runs.minBy(_._1)
         val heap = runs.map(_._2).max
-        val ran = if (local) "local" else "distributed"
         println(f"""{"op":"${args.head}","size":$size,"rows":$rows,"tier":"$tier",""" +
           f""""sec":$sec%.3f,"heap_mb":${heap / 1048576.0}%.1f,"digest":$digest,""" +
           f""""ran":"$ran","out_rows":${outRows.get}}""")

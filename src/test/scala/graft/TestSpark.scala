@@ -5,20 +5,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
-/** One shared local SparkSession for the whole test JVM. */
+/** One shared local SparkSession for the whole test JVM, configured as
+  * the mains are ([[graft.core.GraftSession]]). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.GraftSession.local("4", "WARN")
 
   /** The Spark jobs `body` starts on this thread. A sentinel job in a
     * second group follows it; the listener bus delivers events in order,

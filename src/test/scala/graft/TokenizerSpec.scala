@@ -2,7 +2,7 @@ package graft
 
 import graft.ops.Tokenizer
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class TokenizerSpec extends AnyFunSuite {
@@ -48,25 +48,62 @@ class TokenizerSpec extends AnyFunSuite {
       (4L, 10L, 0L, "a a a a a a a a")))
   }
 
-  /** tokenStats at the default gate and with the distributed tier forced
-    * (`maxLocalTokens = 0`): asserts both tiers agree — rows, schemas, and
-    * which tier the default gate chose — and returns the rows as
-    * (id as string, n_tokens, n_unk, head_toks). */
-  private def tiers(docs: DataFrame, vocab: Seq[String] = Tokenizer.defaultVocab,
-      local: Boolean = true, cap: Long = 10_000_000L): Seq[(String, Long, Long, String)] = {
-    val got = Tokenizer.tokenStats(docs, "doc_id", "text", vocab, maxLocalTokens = cap)
-    val dist = Tokenizer.tokenStats(docs, "doc_id", "text", vocab, maxLocalTokens = 0)
-    def rows(d: DataFrame) = d.collect().map(r =>
-      (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
-    assert(got.queryExecution.logical.isInstanceOf[LocalRelation] == local)
-    assert(!dist.queryExecution.logical.isInstanceOf[LocalRelation])
-    assert(got.schema == dist.schema)
+  /** The join tree that was tokenStats' distributed tier, kept as the
+    * reference its one projection is checked against: words exploded
+    * with their positions, each distinct word tokenized once, then two
+    * joins, two `groupBy`s and two left joins back to the documents.
+    * Unlike tokenStats it merges rows that share an id. */
+  private def reference(docs: DataFrame, idCol: String, textCol: String,
+      vocab: Seq[String]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val words = Tokenizer.explodeWords(docs, idCol, textCol)
+    // word-token sequences feed both the count agg and the head-token
+    // assembly; persisted for the double consumption (repo convention:
+    // LRU-evicted, never eagerly unpersisted under a returned lazy plan)
+    val wordToks = Tokenizer.tokenizeDistinctWords(words, vocab)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wstats = wordToks.select(
+      $"w",
+      size($"toks").cast("long").as("n_tok"),
+      size(filter($"toks", t => t === lit("?"))).cast("long").as("n_unk"))
+    val dstats = words.join(wstats, "w")
+      .groupBy(col(idCol))
+      .agg(sum($"n_tok").as("n_tokens"), sum($"n_unk").as("n_unk"))
+    val head = words.where($"wi" <= 8)
+      .join(wordToks, "w")
+      .groupBy(col(idCol))
+      .agg(sort_array(collect_list(struct($"wi", $"toks"))).as("wl"))
+      .select(col(idCol),
+        concat_ws(" ",
+          slice(flatten(expr("transform(wl, x -> x.toks)")), 1, 8)).as("head_toks"))
+    docs.select(col(idCol))
+      .join(dstats, Seq(idCol), "left")
+      .join(head, Seq(idCol), "left")
+      .select(
+        col(idCol),
+        coalesce($"n_tokens", lit(0L)).as("n_tokens"),
+        coalesce($"n_unk", lit(0L)).as("n_unk"),
+        coalesce($"head_toks", lit("")).as("head_toks"))
+  }
+
+  private def rows(d: DataFrame) = d.collect().map(r =>
+    (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
+
+  /** tokenStats and its [[reference]] tier on ids that do not repeat:
+    * asserts equal rows and schemas, and returns the rows as (id as
+    * string, n_tokens, n_unk, head_toks). */
+  private def tiers(docs: DataFrame, vocab: Seq[String] = Tokenizer.defaultVocab)
+      : Seq[(String, Long, Long, String)] = {
+    val got = Tokenizer.tokenStats(docs, "doc_id", "text", vocab)
+    val ref = reference(docs, "doc_id", "text", vocab)
+    assert(got.schema == ref.schema)
     val out = rows(got)
-    assert(out == rows(dist))
+    assert(out == rows(ref))
     out
   }
 
-  test("tokenStats driver-local tier ≡ distributed tier on text edges") {
+  test("tokenStats ≡ the join-tree reference on text edges") {
     val docs = Seq(
       (Some(1L), "the batch table"), (Some(2L), "xq"), (Some(3L), ""),
       (Some(4L), "a a a a a a a a a a"),
@@ -92,16 +129,11 @@ class TokenizerSpec extends AnyFunSuite {
     assert(tiers(docs, vocab.sorted).nonEmpty)
   }
 
-  test("tokenStats duplicate and double ids route to the distributed tier") {
-    tiers(Seq((1L, "the batch"), (1L, "table"), (2L, "x")).toDF("doc_id", "text"),
-      local = false)
-    tiers(Seq((1.5, "the batch"), (2.5, "table")).toDF("doc_id", "text"), local = false)
-  }
-
-  test("tokenStats: short and null texts count Gate.RowUnits each toward the gate") {
-    val docs = (Seq.tabulate(9)(i => (i.toLong, "xq")) :+ (9L, null)).toDF("doc_id", "text")
-    tiers(docs, local = false, cap = 10 * graft.core.Gate.RowUnits - 1)
-    tiers(docs, cap = 10 * graft.core.Gate.RowUnits)
+  test("tokenStats: rows sharing an id each get their own stats; double ids match the reference") {
+    val dup = Seq((1L, "the batch"), (1L, "table"), (2L, "x")).toDF("doc_id", "text")
+    assert(rows(Tokenizer.tokenStats(dup, "doc_id", "text")) == Seq(
+      ("1", 2L, 0L, "tab le"), ("1", 3L, 0L, "the bat ch"), ("2", 1L, 1L, "?")))
+    tiers(Seq((1.5, "the batch"), (2.5, "table")).toDF("doc_id", "text"))
   }
 
   test("tokenStats tiers agree on texts and ids that are not valid UTF-8") {
@@ -112,7 +144,22 @@ class TokenizerSpec extends AnyFunSuite {
     assert(tiers(docs).size == 3)
     def hexIds(d: DataFrame) = d.selectExpr("hex(doc_id)").collect().map(_.getString(0)).sorted
     assert(hexIds(Tokenizer.tokenStats(docs, "doc_id", "text")) ===
-      hexIds(Tokenizer.tokenStats(docs, "doc_id", "text", maxLocalTokens = 0)))
+      hexIds(reference(docs, "doc_id", "text", Tokenizer.defaultVocab)))
+  }
+
+  test("tokenStats starts no Spark job until consumed") {
+    val docs = Tables("documents")
+    var stats: DataFrame = null
+    assert(TestSpark.jobsOf { stats = Tokenizer.tokenStats(docs, "doc_id", "text") }.isEmpty)
+    assert(TestSpark.jobsOf(stats.collect()).nonEmpty)
+  }
+
+  test("tokenStats over a parquet scan plans no Exchange and no join") {
+    val stats = Tokenizer.tokenStats(Tables("documents"), "doc_id", "text")
+    assert(stats.collect().nonEmpty)
+    val plan = stats.queryExecution.executedPlan.toString
+    assert(plan.contains("FileScan parquet"), plan)
+    assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
   }
 
   test("tokenFrequencies: multiplicity-weighted corpus counts") {
