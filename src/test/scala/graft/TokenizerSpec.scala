@@ -129,7 +129,7 @@ class TokenizerSpec extends AnyFunSuite {
     assert(tiers(docs, vocab.sorted).nonEmpty)
   }
 
-  test("tokenStats: rows sharing an id each get their own stats; double ids match the reference") {
+  test("tokenStats duplicate and double ids route to the distributed tier") {
     val dup = Seq((1L, "the batch"), (1L, "table"), (2L, "x")).toDF("doc_id", "text")
     assert(rows(Tokenizer.tokenStats(dup, "doc_id", "text")) == Seq(
       ("1", 2L, 0L, "tab le"), ("1", 3L, 0L, "the bat ch"), ("2", 1L, 1L, "?")))
